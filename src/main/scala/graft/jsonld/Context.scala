@@ -40,36 +40,51 @@ final class Context private (val options: JsonLdOptions,
   def baseStr: String = castString(self("@base"))
 
   /** Context Processing Algorithm (Core/Context.cs:137-315). */
-  def parse(localContext: JV, remoteContexts: mutable.ArrayBuffer[String]): Context = {
+  def parse(localContext: JV, remoteContexts: mutable.ArrayBuffer[String]): Context =
+    parse(localContext, remoteContexts, null)
+
+  /** `trail`, when non-null, records what processing a memoised remote
+    * context depends on beyond its own text (see [[ContextCache]]). */
+  private def parse(localContext: JV, remoteContexts: mutable.ArrayBuffer[String],
+                    trail: Context.Trail): Context = {
     var result = this.copy()
+    // true while `result` holds a memoised term-definition object: copy before writing
+    var shared = false
     val contexts: Vector[JV] = localContext match {
       case a: JArr => a.items.toVector
       case other   => Vector(other)
     }
-    contexts.foreach { context =>
-      var eachContext = context
+    contexts.foreach { eachContext =>
       if (isNull(eachContext)) {
+        if (trail != null) trail.reset = true
         result = new Context(options)
+        shared = false
       } else eachContext match {
         case JStr(ctxStr) =>
-          var uri = result.baseStr
-          uri = UrlUtil.resolve(uri, ctxStr)
+          val uri = UrlUtil.resolve(result.baseStr, ctxStr)
           if (remoteContexts.contains(uri))
             throw new JsonLdError(JsonLdError.RecursiveContextInclusion, uri)
-          remoteContexts += uri
-          val remoteContext =
-            try options.loadDocument(uri)
-            catch {
-              case err: JsonLdError if err.getMessage.startsWith(JsonLdError.LoadingDocumentFailed.text) =>
-                throw new JsonLdError(JsonLdError.LoadingRemoteContextFailed)
-            }
-          remoteContext match {
-            case o: JObj if o.containsKey("@context") =>
-              result = result.parse(o("@context"), remoteContexts)
+          if (trail != null) trail.imports += ContextCache.Import(ctxStr, uri)
+          options.documentLoader match {
+            case loader: ContextCache.Loader if remoteContexts.isEmpty && result.isInitial =>
+              val hit = ContextCache.lookup(loader, uri, result.baseStr)
+              if (hit != null) {
+                remoteContexts += uri
+                hit.imports.foreach { case (i, _) => remoteContexts += i.url }
+                result = result.withRemote(hit)
+                shared = true
+              } else {
+                val t = new Context.Trail
+                result = result.parseRemote(eachContext, uri, remoteContexts, t)
+                shared = !t.reset
+                if (shared) ContextCache.publish(loader, uri, t.imports.toVector, result)
+              }
             case _ =>
-              throw new JsonLdError(JsonLdError.InvalidRemoteContext, Json.write(eachContext))
+              result = result.parseRemote(eachContext, uri, remoteContexts, trail)
+              shared = false
           }
         case ctxObj: JObj =>
+          if (shared) { result = result.copy(); shared = false }
           // 3.4
           if (remoteContexts.isEmpty && ctxObj.containsKey("@base")) {
             val value = ctxObj("@base")
@@ -120,6 +135,37 @@ final class Context private (val options: JsonLdOptions,
   }
 
   def parse(localContext: JV): Context = parse(localContext, mutable.ArrayBuffer.empty[String])
+
+  /** Loads the remote context `uri` (written as `ref`) and processes its
+    * `@context` on top of this one. */
+  private def parseRemote(ref: JV, uri: String, remoteContexts: mutable.ArrayBuffer[String],
+                          trail: Context.Trail): Context = {
+    remoteContexts += uri
+    val remoteContext =
+      try options.loadDocument(uri)
+      catch {
+        case err: JsonLdError if err.getMessage.startsWith(JsonLdError.LoadingDocumentFailed.text) =>
+          throw new JsonLdError(JsonLdError.LoadingRemoteContextFailed)
+      }
+    remoteContext match {
+      case o: JObj if o.containsKey("@context") => parse(o("@context"), remoteContexts, trail)
+      case _ => throw new JsonLdError(JsonLdError.InvalidRemoteContext, Json.write(ref))
+    }
+  }
+
+  /** No term definitions, `@vocab` or `@language`: what processing a
+    * remote context from here yields does not depend on this context. */
+  private def isInitial: Boolean =
+    termDefinitions.isEmpty && !self.containsKey("@vocab") && !self.containsKey("@language")
+
+  /** This (initial) context with a memoised remote context applied: this
+    * context's `@base`, the memo's `@vocab`, `@language` and shared terms. */
+  private def withRemote(p: ContextCache.Processed): Context = {
+    val s = self.deepClone().asInstanceOf[JObj]
+    if (p.vocab != null) s.put("@vocab", p.vocab)
+    if (p.language != null) s.put("@language", p.language)
+    new Context(options, s, p.terms)
+  }
 
   /** Create Term Definition (Core/Context.cs:333-532). */
   private def createTermDefinition(context: JObj, term: String,
@@ -589,5 +635,17 @@ final class Context private (val options: JsonLdOptions,
     val rval = new JObj
     if (!ctx.isEmpty) rval.put("@context", ctx)
     rval
+  }
+}
+
+private object Context {
+
+  /** What a remote context pulled in while it was processed: each import
+    * as written and resolved, and whether a `null` reset the context
+    * (which restores the document's own base, so the outcome is not
+    * reusable). */
+  private final class Trail {
+    val imports = mutable.ArrayBuffer.empty[ContextCache.Import]
+    var reset = false
   }
 }

@@ -159,6 +159,7 @@ object Json {
       if (i < n && s.charAt(i) == '}') { i += 1; return o }
       while (true) {
         skipWs()
+        if (i >= n) fail("unterminated object")
         val q = s.charAt(i)
         if (q != '"' && q != '\'') fail(s"expected string key at $i")
         val k = parseString(q)
@@ -216,7 +217,10 @@ object Json {
             case 't'  => sb.append('\t')
             case 'u'  =>
               if (i + 4 >= n) fail("bad \\u escape")
-              sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar)
+              val code =
+                try Integer.parseInt(s.substring(i + 1, i + 5), 16)
+                catch { case _: NumberFormatException => fail(s"bad \\u escape at $i") }
+              sb.append(code.toChar)
               i += 4
             case c2 => fail(s"bad escape \\$c2")
           }
@@ -244,9 +248,11 @@ object Json {
     }
 
     private def mkNum(tok: String, isFloat: Boolean): JV =
-      if (isFloat) JDouble(java.lang.Double.parseDouble(tok))
-      else try JLong(java.lang.Long.parseLong(tok))
-      catch { case _: NumberFormatException => JDouble(java.lang.Double.parseDouble(tok)) }
+      try {
+        if (isFloat) JDouble(java.lang.Double.parseDouble(tok))
+        else try JLong(java.lang.Long.parseLong(tok))
+        catch { case _: NumberFormatException => JDouble(java.lang.Double.parseDouble(tok)) }
+      } catch { case _: NumberFormatException => fail(s"bad number '$tok' at $i") }
   }
 
   /** Compact serialization (debugging / fingerprints). Key order preserved. */

@@ -1,5 +1,6 @@
 package graft.jsonld
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** N-Quads (de)serialization
@@ -144,10 +145,17 @@ object NQuads {
 
   private val Hex = "[0-9A-Fa-f]"
   private val Uchar = s"\\\\u$Hex{4}|\\\\U$Hex{8}"
-  private val Iri = s"(?:<((?:[^\\x00-\\x20<>\"{}|^`\\\\]|$Uchar)*)>)"
+  // IRI and literal bodies: runs of plain characters between escapes. An
+  // escape always starts with a backslash, which no plain character
+  // matches, so the possessive loops accept exactly what
+  // `(?:plain|escape)*` accepts, without a recursive regex step per
+  // character.
+  private val IriChar = "[^\\x00-\\x20<>\"{}|^`\\\\]"
+  private val Iri = s"(?:<($IriChar*+(?:(?:$Uchar)$IriChar*+)*+)>)"
   private val Bnode = "(_:(?:[A-Za-z0-9](?:[A-Za-z0-9\\-\\.]*[A-Za-z0-9])?))"
   private val Echar = "\\\\[tbnrf\"'\\\\]"
-  private val Plain = s""""((?:[^\\x22\\x5C\\x0A\\x0D]|$Echar|$Uchar)*)""""
+  private val PlainChar = "[^\\x22\\x5C\\x0A\\x0D]"
+  private val Plain = s""""($PlainChar*+(?:(?:$Echar|$Uchar)$PlainChar*+)*+)""""
   private val Datatype = s"(?:\\^\\^$Iri)"
   private val Language = "(?:@([a-z]+(?:-[a-zA-Z0-9]+)*))"
   private val Literal = s"(?:$Plain(?:$Datatype|$Language)?)"
@@ -158,7 +166,26 @@ object NQuads {
   private val ObjectP = s"(?:$Iri|$Bnode|$Literal)$Wso"
   private val Graph = s"(?:\\.|(?:(?:$Iri|$Bnode)$Wso\\.))"
   private val QuadP = java.util.regex.Pattern.compile(s"^$Wso$Subject$Property$ObjectP$Graph$Wso(#.*)?$$")
-  private val Eoln = java.util.regex.Pattern.compile("(?:\r\n)|(?:\n)|(?:\r)")
+
+  /** `s` split at each "\r\n", "\n" or "\r", empty lines (trailing ones
+    * too) kept: `String.split` with that alternation and limit -1, without
+    * a regex scan of the whole input. */
+  private def splitLines(s: String): ArrayBuffer[String] = {
+    val out = new ArrayBuffer[String]
+    var start = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\n' || c == '\r') {
+        out += s.substring(start, i)
+        if (c == '\r' && i + 1 < s.length && s.charAt(i + 1) == '\n') i += 1
+        start = i + 1
+      }
+      i += 1
+    }
+    out += s.substring(start)
+    out
+  }
 
   def parseNQuads(input: String): RdfDataset = {
     val dataset = new RdfDataset
@@ -166,9 +193,13 @@ object NQuads {
     // reference uses to load .nq fixtures like NQuads/rdf11blanknodes.nq)
     // consume a UTF-8 BOM implicitly.
     val src = if (input.nonEmpty && input.charAt(0) == '﻿') input.substring(1) else input
-    val lines = Eoln.split(src, -1)
+    // the check is a pure function of the IRI, and predicates and
+    // datatypes repeat on most lines
+    val absolute = mutable.HashSet.empty[String]
+    def requireAbsolute(iri: String): Unit =
+      if (!absolute.contains(iri)) { assertAbsoluteIri(iri); absolute += iri }
     var lineNumber = 0
-    lines.foreach { line =>
+    splitLines(src).foreach { line =>
       lineNumber += 1
       if (!EmptyOrComment.matcher(line).matches()) {
         val m = QuadP.matcher(line)
@@ -177,12 +208,12 @@ object NQuads {
             "Error while parsing N-Quads; invalid quad. line:" + lineNumber)
         def g(i: Int): String = m.group(i)
         val subject: RdfNode =
-          if (g(1) != null) { val s = unescape(g(1)); assertAbsoluteIri(s); new RdfIri(s) }
+          if (g(1) != null) { val s = unescape(g(1)); requireAbsolute(s); new RdfIri(s) }
           else new RdfBlank(unescape(g(2)))
-        val predIri = unescape(g(3)); assertAbsoluteIri(predIri)
+        val predIri = unescape(g(3)); requireAbsolute(predIri)
         val predicate: RdfNode = new RdfIri(predIri)
         val obj: RdfNode =
-          if (g(4) != null) { val s = unescape(g(4)); assertAbsoluteIri(s); new RdfIri(s) }
+          if (g(4) != null) { val s = unescape(g(4)); requireAbsolute(s); new RdfIri(s) }
           else if (g(5) != null) new RdfBlank(unescape(g(5)))
           else {
             val language = unescape(g(8))
@@ -190,11 +221,11 @@ object NQuads {
               if (g(7) != null) unescape(g(7))
               else if (g(8) != null) JsonLdConsts.RdfLangstring
               else JsonLdConsts.XsdString
-            assertAbsoluteIri(datatype)
+            requireAbsolute(datatype)
             new RdfLiteral(unescape(g(6)), datatype, language)
           }
         var name = "@default"
-        if (g(9) != null) { name = unescape(g(9)); assertAbsoluteIri(name) }
+        if (g(9) != null) { name = unescape(g(9)); requireAbsolute(name) }
         else if (g(10) != null) name = unescape(g(10))
         val gOpt =
           if (name != "@default")

@@ -270,10 +270,17 @@ object NormalizeUtils {
     var pathNamer: UniqueNamer = null
   }
 
+  private val HexDigits = "0123456789abcdef".toCharArray
+
   def encodeHex(data: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(data.length * 2)
-    data.foreach(b => sb.append(f"${b & 0xFF}%02x"))
-    sb.toString
+    val out = new Array[Char](data.length * 2)
+    var i = 0
+    while (i < data.length) {
+      out(2 * i) = HexDigits((data(i) >> 4) & 0xF)
+      out(2 * i + 1) = HexDigits(data(i) & 0xF)
+      i += 1
+    }
+    new String(out)
   }
 
   /** Steinhaus–Johnson–Trotter permutator over ordinally-sorted strings

@@ -44,7 +44,8 @@ object TripleEmit {
   /** One extracted block → triples (+ optional canonicalized bnode names).
     * Errors return Left(quarantine) — a bad page must not kill the job.
     * `contextCache` (url -> raw JSON) resolves remote `@context`
-    * references offline (ContextCache — the S1 stand-in); when empty,
+    * references offline (ContextCache — the S1 stand-in; a remote context
+    * many documents share is processed once per thread); when empty,
     * any remote context quarantines the document. */
   def docToTriples(doc: ExtractedDoc, normalizeBNodes: Boolean,
                    baseUri: String,
@@ -87,8 +88,8 @@ object TripleEmit {
     }
   }
 
-  /** The distributed spine. Quarantined rows are counted via an
-    * accumulator; callers wanting the rows use `quarantine`. */
+  /** The distributed spine. Quarantined documents are dropped here
+    * without being counted; callers wanting the rows use `quarantine`. */
   def triples(docs: Dataset[ExtractedDoc], normalizeBNodes: Boolean = false,
               contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
     import docs.sparkSession.implicits._

@@ -45,6 +45,20 @@ class NQuadsSyntaxSpec extends AnyFunSuite {
       s"too many bad cases accepted: ${accepted.map(_.getFileName).mkString(", ")}")
   }
 
+  test("\\n, \\r\\n and \\r line ends and escaped IRIs and literals parse alike") {
+    val lines = Seq(
+      """<http://a.example/s> <http://p.example/é> "xA\"\\y"@en-us .""",
+      """_:b0 <http://p.example/q> <http://o.example/\U0001F600> <http://g.example/> .""",
+      "",
+      """<http://a.example/s> <http://p.example/q> "1"^^<http://www.w3.org/2001/XMLSchema#integer> . # c""")
+    val parsed = Seq("\n", "\r\n", "\r").map(eol => NQuads.toNQuads(NQuads.parseNQuads(lines.mkString(eol) + eol + eol)))
+    assert(parsed.distinct.size == 1)
+    assert(parsed.head.linesIterator.size == 3)
+    assert(parsed.head.contains("\"xA\\\"\\\\y\"@en-us") && parsed.head.contains("<http://p.example/é>"))
+    val bad = intercept[JsonLdError](NQuads.parseNQuads("<http://a/s> <http://p/q> <http://o/\\u00zz> .\r"))
+    assert(bad.errorType == JsonLdError.SyntaxError)
+  }
+
   test("round-trip: parse → serialize → parse is stable") {
     val positives = files.filterNot(_.getFileName.toString.contains("-bad-"))
     positives.foreach { p =>
