@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -12,18 +13,33 @@ import java.sql.Timestamp
   * is Parquet partitioned by the lineage key with DYNAMIC partition
   * overwrite — re-running a partition replaces its previous files instead
   * of appending stale duplicates (round 1 appended; ADVICE.md) — plus a
-  * manifest table published after each data write (write-audit-publish).
+  * manifest published after each data write (write-audit-publish).
+  *
+  * The manifest holds one row per host bucket (at most [[Buckets]]), so
+  * it is driver-side metadata, not a table: the manifest is the NEWEST
+  * complete snapshot file `snapshot-<n>.parquet` in the manifest
+  * directory. A publish writes the merged rows as one parquet file into
+  * the hidden `_staging` directory, renames it to the next snapshot
+  * number and only then deletes older snapshots, so a crash at any step
+  * leaves either the old or the new snapshot readable. A directory in the
+  * older layout (one `partition_key=hbN/` directory per bucket) still
+  * reads, and the next publish replaces it. The manifest directory is
+  * owned by this object: a publish deletes everything else in it.
   * A real deployment swaps these methods for an Iceberg catalog without
   * touching the engine.
   */
 object Lineage {
+
+  /** Number of host buckets: the lineage keyspace, and so the bound of
+    * every driver-side collect of manifest rows or fingerprints. */
+  val Buckets = 64
 
   /** Stable lineage partition key for a page url: a hash bucket of its
     * host (hot hosts do NOT map 1:1 to output partitions). Pure Scala so
     * the fused flatMap (TripleEmit.emitKeyed) computes the identical key
     * without a second pass; values are non-numeric ("hb3") so Spark's
     * partition-column type inference keeps them strings on read-back. */
-  def hostBucket(url: String, buckets: Int = 64): String = {
+  def hostBucket(url: String, buckets: Int = Buckets): String = {
     val schemeEnd = url.indexOf("://")
     val hs = if (schemeEnd >= 0) schemeEnd + 3 else 0
     val slash = url.indexOf('/', hs)
@@ -40,30 +56,44 @@ object Lineage {
     * between the DataFrame and typed paths. */
   def partitionKeyCol: Column = hostBucketUdf(col("url"))
 
-  /** Fingerprint of the input slice belonging to a partition key —
-    * order-independent (xor of per-row hashes) so it is reproducible
-    * regardless of task scheduling, and overflow-free under ANSI mode. */
-  def fingerprint(df: DataFrame, keyCol: String): DataFrame =
-    df.groupBy(col(keyCol))
-      .agg(expr("bit_xor(xxhash64(url))").as("input_fingerprint"),
-        count(lit(1)).as("row_count"))
+  /** Fingerprint of the input slice belonging to each `partition_key` of
+    * `df`, collected by one aggregate job — order-independent (xor of
+    * per-row hashes) so it is reproducible regardless of task scheduling,
+    * and overflow-free under ANSI mode. */
+  private def fingerprints(df: DataFrame, what: String): Seq[(String, Long)] =
+    Bounded.collect(df.groupBy(col("partition_key").cast("string"))
+      .agg(expr("bit_xor(xxhash64(url))")), Buckets, what)
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
 
-  /** Load the lineage manifest. A MISSING manifest is the normal first-run
-    * state and yields an empty frame; a manifest that EXISTS but cannot be
-    * read/projected fails loudly instead of silently falling back to empty
-    * (which would quietly schedule a full re-run — at 100 TB an expensive
-    * surprise an operator must opt into by deleting the manifest;
-    * VERDICT r4 #4). */
-  def readManifest(spark: SparkSession, manifestPath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(manifestPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.Encoders.product[LineageRow].schema)
-    else
-      try spark.read.parquet(manifestPath)
-        .select(col("partition_key").cast("string"), col("input_fingerprint"),
-          col("triple_count"), col("status"), col("updated_at"))
+  private val SnapshotName = """snapshot-(\d+)\.parquet""".r
+  private val StagingDir = "_staging"
+
+  /** The published snapshots among a manifest directory's entries, by number. */
+  private def snapshots(entries: Seq[FileStatus]): Seq[(Long, Path)] =
+    entries.flatMap { st =>
+      st.getPath.getName match {
+        case SnapshotName(n) if st.isFile => Some(n.toLong -> st.getPath)
+        case _ => None
+      }
+    }
+
+  /** The rows of [[readManifest]]. */
+  private def manifestRows(spark: SparkSession, manifestPath: String): Seq[LineageRow] = {
+    val dir = new Path(manifestPath)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val source =
+      if (!fs.exists(dir)) None
+      else {
+        val entries = fs.listStatus(dir).toSeq
+        snapshots(entries).maxByOption(_._1).map(_._2.toString).orElse(
+          if (entries.nonEmpty && entries.forall(_.getPath.getName == StagingDir)) None
+          else Some(manifestPath))
+      }
+    source.fold(Seq.empty[LineageRow]) { src =>
+      try Bounded.collect(spark.read.parquet(src)
+          .select(col("partition_key").cast("string"), col("input_fingerprint"),
+            col("triple_count"), col("status"), col("updated_at"))
+          .as(Encoders.product[LineageRow]), Buckets, s"lineage manifest at $src").toSeq
       catch {
         case e: Exception =>
           throw new IllegalStateException(
@@ -72,23 +102,37 @@ object Lineage {
               "empty and re-run everything; delete the manifest to force a " +
               "full re-run", e)
       }
+    }
   }
 
-  /** Resume filter: drop pages whose partition is already marked done with
-    * a matching fingerprint (left_anti against the manifest). */
+  /** Load the lineage manifest: the newest snapshot, or a directory in
+    * the older partitioned layout. A MISSING manifest is the normal
+    * first-run state and yields an empty frame, as does a directory
+    * holding only the staging directory of a first publish that crashed
+    * before its rename. A manifest that EXISTS but cannot be
+    * read/projected fails loudly instead of silently falling back to
+    * empty (which would quietly schedule a full re-run — at 100 TB an
+    * expensive surprise an operator must opt into by deleting the
+    * manifest; VERDICT r4 #4). The rows are read when this is called and
+    * returned as a local frame, so a later publish cannot change a frame
+    * a caller already holds. */
+  def readManifest(spark: SparkSession, manifestPath: String): DataFrame =
+    spark.createDataFrame(manifestRows(spark, manifestPath))
+
+  /** Resume filter: the pages whose partition is not marked done with a
+    * matching fingerprint. Decided on the driver: the `done` manifest rows
+    * and the page fingerprints are both bounded by [[Buckets]], so they
+    * are collected — this runs the fingerprint job when CALLED, not when
+    * the result is used — and the pages are filtered by the pending keys.
+    * The returned plan reads only `pages`, never the manifest. */
   def pendingPages(pages: DataFrame, manifest: DataFrame): DataFrame = {
-    val done = manifest.filter(col("status") === "done")
-      .select(col("partition_key"), col("input_fingerprint").as("done_fp"))
+    val done = Bounded.collect(manifest.filter(col("status") === "done")
+        .select(col("partition_key"), col("input_fingerprint")), Buckets, "lineage manifest rows")
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val keyed = pages.withColumn("partition_key", partitionKeyCol)
-    val fps = fingerprint(keyed, "partition_key")
-      .select(col("partition_key"), col("input_fingerprint"))
-    val stillPending = fps.join(done, Seq("partition_key"), "left_anti")
-      .union(
-        // also re-run partitions whose fingerprint changed since the run
-        fps.join(done, Seq("partition_key"))
-          .filter(col("input_fingerprint") =!= col("done_fp"))
-          .select(col("partition_key"), col("input_fingerprint")))
-    keyed.join(broadcast(stillPending.select("partition_key")), Seq("partition_key"), "left_semi")
+    val pendingKeys = fingerprints(keyed, "page fingerprints")
+      .collect { case (k, fp) if !done.get(k).contains(fp) => k }
+    keyed.filter(col("partition_key").isin(pendingKeys: _*))
   }
 
   /** Delete the partition directories for `keys` under `path` (bounded:
@@ -100,12 +144,54 @@ object Lineage {
     * fully supersede prior state. */
   def deletePartitions(spark: SparkSession, path: String, keys: Seq[String]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(path)
+    val base = new Path(path)
     val fs = base.getFileSystem(conf)
     if (fs.exists(base)) keys.foreach { k =>
-      val p = new org.apache.hadoop.fs.Path(base, s"partition_key=$k")
+      val p = new Path(base, s"partition_key=$k")
       if (fs.exists(p)) fs.delete(p, true)
     }
+  }
+
+  /** Rows written per partition for `keys`: reads back only those
+    * partition directories (a re-run partition with zero rows has none). */
+  private def auditCounts(spark: SparkSession, outPath: String, keys: Seq[String]): Map[String, Long] = {
+    val base = new Path(outPath)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val present = if (fs.exists(base)) fs.listStatus(base).map(_.getPath.getName).toSet else Set.empty[String]
+    val dirs = keys.map(k => s"partition_key=$k").filter(present)
+    if (dirs.isEmpty) Map.empty
+    else Bounded.collect(spark.read.option("basePath", outPath)
+        .parquet(dirs.map(d => new Path(base, d).toString): _*)
+        .groupBy(col("partition_key").cast("string"))
+        .agg(count(lit(1))), Buckets, "audit counts")
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** Publish `rows` as the complete manifest: write them as one parquet
+    * file into the staging directory, rename it to the next snapshot
+    * number, then delete everything else in the manifest directory (older
+    * snapshots, an older partitioned layout, the staging directory). The
+    * writer's output path is the staging directory, so Spark never
+    * refreshes a cached plan over the manifest path. `step` is called
+    * after the "staged" and "renamed" steps; a spec throws from it to
+    * crash the publish there. */
+  private[pipeline] def publish(spark: SparkSession, manifestPath: String, rows: Seq[LineageRow],
+                                step: String => Unit = _ => ()): Unit = {
+    val dir = new Path(manifestPath)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(dir, StagingDir)
+    spark.createDataFrame(rows).coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    step("staged")
+    val parts = fs.listStatus(staging).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    if (parts.length != 1)
+      throw new IllegalStateException(s"lineage publish staged ${parts.length} files in $staging, expected 1")
+    val next = snapshots(fs.listStatus(dir).toSeq).map(_._1).maxOption.getOrElse(0L) + 1
+    val snapshot = new Path(dir, f"snapshot-$next%020d.parquet")
+    if (!fs.rename(parts.head, snapshot))
+      throw new IllegalStateException(s"lineage publish could not rename ${parts.head} to $snapshot")
+    step("renamed")
+    fs.listStatus(dir).map(_.getPath).filter(_.getName != snapshot.getName)
+      .foreach(fs.delete(_, true))
   }
 
   /** Write triples partitioned by the lineage key with dynamic partition
@@ -120,6 +206,15 @@ object Lineage {
     * write-audit-publish semantics are preserved. Returns this run's
     * partition keys so callers can reuse them without re-collecting.
     *
+    * One fingerprint aggregate over `pagesKeyed` gives both this run's
+    * keys and their new fingerprints; the published snapshot keeps the
+    * previous rows of every other key.
+    *
+    * This sets `spark.sql.sources.partitionOverwriteMode=dynamic` for the
+    * whole SESSION, not just this write: the quarantine sinks of
+    * `graft.KgRun` and the perfbench kg_resume job overwrite their
+    * partitioned tables after this call and rely on it.
+    *
     * `beforePublish` runs with this run's keys AFTER the data write+audit
     * but BEFORE the manifest publish: auxiliary sinks (KgRun's quarantine
     * table) write there so a crash anywhere before publish leaves the
@@ -129,28 +224,20 @@ object Lineage {
                        outPath: String, manifestPath: String,
                        beforePublish: Seq[String] => Unit = _ => ()): Seq[String] = {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // the key list is bounded by the bucket count (64)
-    val runKeys = pagesKeyed.select(col("partition_key")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val fps = fingerprints(pagesKeyed, "run fingerprints")
+    val runKeys = fps.map(_._1)
     deletePartitions(spark, outPath, runKeys)
     triplesKeyed.write.mode(SaveMode.Overwrite)
       .partitionBy("partition_key").parquet(outPath)
-    // audit: count rows actually written per partition; the isin filter
-    // partition-prunes the audit scan to this run's directories only.
-    val writtenCounts = spark.read.parquet(outPath)
-      .filter(col("partition_key").isin(runKeys: _*))
-      .groupBy(col("partition_key").cast("string").as("partition_key"))
-      .agg(count(lit(1)).as("triple_count"))
+    val written = auditCounts(spark, outPath, runKeys)
     beforePublish(runKeys)
-    val now = new Timestamp(System.currentTimeMillis())
-    val manifest = fingerprint(pagesKeyed, "partition_key")
-      .join(writtenCounts, Seq("partition_key"), "left")
-      .select(col("partition_key"), col("input_fingerprint"),
-        coalesce(col("triple_count"), lit(0L)).as("triple_count"))
-      .withColumn("status", lit("done"))
-      .withColumn("updated_at", lit(now))
-    manifest.write.mode(SaveMode.Overwrite)
-      .partitionBy("partition_key").parquet(manifestPath)
+    if (runKeys.nonEmpty) {
+      val now = new Timestamp(System.currentTimeMillis())
+      val run = runKeys.toSet
+      val kept = manifestRows(spark, manifestPath).filterNot(r => run(r.partition_key))
+      publish(spark, manifestPath, kept ++ fps.map { case (k, fp) =>
+        LineageRow(k, fp, written.getOrElse(k, 0L), "done", now) })
+    }
     runKeys
   }
 }
