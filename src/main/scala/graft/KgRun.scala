@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline._
 
@@ -9,6 +9,9 @@ import graft.pipeline._
   * expand → toRDF → dedup → partitioned write + lineage manifest +
   * adjacency table. Re-running after a crash (or with new input) only
   * processes partitions whose fingerprint is new/changed.
+  *
+  * [[run]] is the job; `main` only builds the session and the generated
+  * pages, and `KgRunSpec` runs [[run]] itself.
   *
   * Usage: KgRun <outDir> [nPages] [cores]
   */
@@ -23,41 +26,39 @@ object KgRun {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
+    println(run(spark, PageGen.pages(spark, nPages, 42L, cores.toInt * 4), outDir))
+    spark.stop()
+  }
 
+  /** The job over `pages` into `outDir` (tables `triples`, `lineage`,
+    * `quarantine`, `adjacency`); returns its one-line JSON report. */
+  def run(spark: SparkSession, pages: Dataset[Page], outDir: String): String = {
+    import spark.implicits._
     val triplesPath = s"$outDir/triples"
     val manifestPath = s"$outDir/lineage"
     val adjacencyPath = s"$outDir/adjacency"
     val quarantinePath = s"$outDir/quarantine"
 
-    val pages = PageGen.pages(spark, nPages, 42L, cores.toInt * 4).toDF()
+    val nPages = pages.count()
     val manifest = Lineage.readManifest(spark, manifestPath)
-    val pending = Lineage.pendingPages(pages, manifest).cache()
+    val pending = Lineage.pendingPages(pages.toDF(), manifest).cache()
     val nPending = pending.count()
     if (nPending == 0) {
-      println(s"""{"job":"kg","status":"up-to-date","pages":$nPages,"pending":0}""")
-      spark.stop()
-      return
+      pending.unpersist()
+      return s"""{"job":"kg","status":"up-to-date","pages":$nPages,"pending":0}"""
     }
 
     // ONE pass over the pending pages produces both triples and
     // quarantine rows (round 1 re-ran extract+expand for quarantine —
     // doubling the job at scale). persist() lets the two sinks share the
     // computation; disk-spillable so a 100 TB run degrades, not dies.
-    val pendingPages = pending.drop("partition_key").as[Page]
-    val emitted = TripleEmit.emitKeyed(pendingPages)
+    val emitted = TripleEmit.emitKeyed(pending.drop("partition_key").as[Page])
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // observe-based metrics (SURVEY §2.4 UDAF/observe row): counts ride
     // the write pass itself — no second scan, no accumulator races
     val obs = org.apache.spark.sql.Observation("kg_metrics")
-    val triplesKeyed = emitted.filter(col("kind") === 0)
-      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
-      // dedup within the lineage partition (keys are host-derived, so a
-      // given page's triples always land in the same partition; global
-      // cross-host dedup is a downstream compaction)
-      .dropDuplicates()
+    val triplesKeyed = TripleEmit.keyedTriples(emitted)
       .observe(obs, count(lit(1)).as("triples_written"),
         sum(when(col("objKind") === 2, 1L).otherwise(0L)).as("literal_triples"))
     // the quarantine sink writes INSIDE the write-audit-publish window
@@ -69,12 +70,11 @@ object KgRun {
     Lineage.writeWithLineage(spark, triplesKeyed, pending, triplesPath, manifestPath,
       beforePublish = runKeys => {
         Lineage.deletePartitions(spark, quarantinePath, runKeys)
-        emitted.filter(col("kind") === 1)
-          .select(col("url"), col("block_idx"), col("errorCode"), col("errorDetail"),
-            col("partition_key"))
+        TripleEmit.keyedQuarantine(emitted)
           .write.mode(SaveMode.Overwrite).partitionBy("partition_key").parquet(quarantinePath)
       })
     emitted.unpersist()
+    pending.unpersist()
 
     val written = spark.read.parquet(triplesPath)
     GraphMaterialize.adjacency(written.drop("partition_key").as[Triple])
@@ -87,7 +87,6 @@ object KgRun {
       try spark.read.parquet(quarantinePath).count()
       catch { case _: org.apache.spark.sql.AnalysisException => 0L }
     val metrics = obs.get.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"job":"kg","status":"done","pages":$nPages,"pending":$nPending,"triples_total":$nTriples,"quarantined":$nQuarantine,"observed":$metrics,"out":"$outDir"}""")
-    spark.stop()
+    s"""{"job":"kg","status":"done","pages":$nPages,"pending":$nPending,"triples_total":$nTriples,"quarantined":$nQuarantine,"observed":$metrics,"out":"$outDir"}"""
   }
 }

@@ -94,6 +94,21 @@ object Extract {
     out.result()
   }
 
+  /** One page's extracted documents: the script blocks, then the
+    * microdata blocks, with `block_idx` counting across both. The one
+    * extraction enumeration of the KG spine (TripleEmit's emit loop); a
+    * change here changes every emitter together. */
+  def docs(page: Page): Iterator[ExtractedDoc] = {
+    val html = new String(page.html, java.nio.charset.StandardCharsets.UTF_8)
+    val blocks = scriptBlocksTolerant(html)
+    val micro = microdataBlocks(html)
+    blocks.iterator.zipWithIndex.map { case (p, i) =>
+      ExtractedDoc(page.url, i, p, "jsonld")
+    } ++ micro.iterator.zipWithIndex.map { case (p, i) =>
+      ExtractedDoc(page.url, blocks.size + i, p, "microdata")
+    }
+  }
+
   /** `<a href="...">text</a>` anchors, in document order. Same
     * byte-exactness discipline as the script blocks: the canonical
     * double-quoted form is matched verbatim (the synthetic corpus always
@@ -118,22 +133,6 @@ object Extract {
     pages.flatMap { page =>
       val html = new String(page.html, java.nio.charset.StandardCharsets.UTF_8)
       anchorLinks(html).map { case (href, text) => PageLink(page.url, href, text) }
-    }
-  }
-
-  /** Dataset-level extraction: one narrow flatMap, columnar-pruned input
-    * (only url + html are read from the scan). */
-  def extract(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
-    import pages.sparkSession.implicits._
-    pages.flatMap { page =>
-      val html = new String(page.html, java.nio.charset.StandardCharsets.UTF_8)
-      val scripts = scriptBlocksTolerant(html).zipWithIndex.map { case (p, idx) =>
-        ExtractedDoc(page.url, idx, p, "jsonld")
-      }
-      val micro = microdataBlocks(html).zipWithIndex.map { case (p, idx) =>
-        ExtractedDoc(page.url, scripts.size + idx, p, "microdata")
-      }
-      scripts ++ micro
     }
   }
 }

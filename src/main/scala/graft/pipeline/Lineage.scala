@@ -200,7 +200,7 @@ object Lineage {
     * [[deletePartitions]]), audit the written files, then publish the
     * manifest rows with the TRUE written triple count per partition (round
     * 1 recorded the page count under `triple_count`). `triplesKeyed` must
-    * carry a `partition_key` column (TripleEmit.emitKeyed provides it).
+    * carry a `partition_key` column (TripleEmit.keyedTriples provides it).
     * Crash between delete and publish leaves the partition pending in the
     * manifest (old fingerprint), so the next run re-processes it —
     * write-audit-publish semantics are preserved. Returns this run's

@@ -54,7 +54,8 @@ final case class QuarantineRow(
   * fields null) or a quarantine record (kind=1, triple fields null), both
   * tagged with the page's lineage partition key — so ONE pass over the
   * corpus feeds both sinks (round 1 re-ran extract+expand a second time
-  * just to collect quarantine rows; at 100 TB that doubles the job). */
+  * just to collect quarantine rows; at 100 TB that doubles the job).
+  * `TripleEmit.keyedTriples`/`keyedQuarantine` split it by kind. */
 final case class EmitRow(
     partition_key: String,
     kind: Byte, // 0 = triple, 1 = quarantine

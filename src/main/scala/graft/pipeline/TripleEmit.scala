@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.functions._
 import graft.jsonld._
 
 /** Per-document JSON-LD → triples core, run inside one narrow flatMap
@@ -13,8 +14,22 @@ import graft.jsonld._
   * a corpus-wide union never collides and re-running any subset of
   * partitions reproduces identical labels — no coordination, no
   * monotonically_increasing_id (SURVEY.md §4.3).
+  *
+  * One emit loop (the private `emit`) runs extraction and `docToTriples`
+  * for every public entry; each entry only chooses its rows:
+  *  - [[pipeline]]: deduplicated `Triple`s, quarantined documents dropped;
+  *  - [[triplesWithSource]]: every triple with its page url (8 columns),
+  *    quarantined documents dropped;
+  *  - [[emitKeyed]]: `EmitRow`s tagged with the page's lineage key, one
+  *    per triple (kind 0) and one per quarantined document (kind 1),
+  *    split by [[keyedTriples]] and [[keyedQuarantine]].
   */
 object TripleEmit {
+
+  /** Quarantine error code of a document whose processing exhausted the
+    * thread stack (deep nesting; the parser and the JSON-LD passes are
+    * recursive and have no depth budget). */
+  val StackOverflowCode = "stack overflow"
 
   /** 128-bit doc key: two independent 64-bit hashes of the full url (an
     * FNV-1a stream and a polynomial stream, one pass), each mixed with the
@@ -46,7 +61,10 @@ object TripleEmit {
     * `contextCache` (url -> raw JSON) resolves remote `@context`
     * references offline (ContextCache — the S1 stand-in; a remote context
     * many documents share is processed once per thread); when empty,
-    * any remote context quarantines the document. */
+    * any remote context quarantines the document. This is the spine's one
+    * per-document failure boundary: any `Exception`, and stack exhaustion
+    * ([[StackOverflowCode]]), becomes a quarantine row; nothing broader
+    * is caught. */
   def docToTriples(doc: ExtractedDoc, normalizeBNodes: Boolean,
                    baseUri: String,
                    contextCache: Map[String, String] = Map.empty): Either[QuarantineRow, Vector[Triple]] = {
@@ -85,30 +103,9 @@ object TripleEmit {
       case e: Exception =>
         Left(QuarantineRow(doc.url, doc.block_idx, "internal error",
           s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-    }
-  }
-
-  /** The distributed spine. Quarantined documents are dropped here
-    * without being counted; callers wanting the rows use `quarantine`. */
-  def triples(docs: Dataset[ExtractedDoc], normalizeBNodes: Boolean = false,
-              contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { doc =>
-      docToTriples(doc, normalizeBNodes, null, contextCache) match {
-        case Right(ts) => ts
-        case Left(_)   => Vector.empty[Triple]
-      }
-    }
-  }
-
-  def quarantine(docs: Dataset[ExtractedDoc],
-                 contextCache: Map[String, String] = Map.empty): Dataset[QuarantineRow] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap { doc =>
-      docToTriples(doc, normalizeBNodes = false, null, contextCache) match {
-        case Left(q) => Some(q)
-        case _       => None
-      }
+      case _: StackOverflowError =>
+        Left(QuarantineRow(doc.url, doc.block_idx, StackOverflowCode,
+          "the document's nesting exhausted the thread stack"))
     }
   }
 
@@ -118,63 +115,45 @@ object TripleEmit {
   def dedup(ts: Dataset[Triple]): Dataset[Triple] =
     ts.dropDuplicates("subj", "pred", "objKind", "objValue", "objDatatype", "objLang", "graph")
 
-  /** End-to-end: pages → extracted docs → deduplicated triples.
-    *
-    * Extraction and triple emission are fused into ONE typed flatMap so a
-    * page is decoded from Tungsten format exactly once — chaining separate
-    * typed transforms would pay an encoder round-trip (serialize +
-    * deserialize of the ~2KB html rows) at every boundary. The only
-    * shuffle left is the dedup hash-aggregate. */
+  /** The emit loop: the ONE typed flatMap over pages behind every public
+    * emitter. Each page's documents ([[Extract.docs]]) go through
+    * [[docToTriples]] once; `rows(page)` is applied once per page and
+    * turns each document's result into the caller's rows, so each caller
+    * carries exactly its own row type and width (a typed flatMap's output
+    * cannot be column-pruned by Catalyst, so no emitter pays for a wider
+    * shared row). Extraction and triple emission stay fused in this one
+    * stage so a page is decoded from Tungsten format exactly once —
+    * chaining separate typed transforms would pay an encoder round-trip
+    * of the ~2KB html rows at every boundary. */
+  private def emit[R: Encoder](pages: Dataset[Page], normalizeBNodes: Boolean,
+      contextCache: Map[String, String])(
+      rows: Page => Either[QuarantineRow, Vector[Triple]] => IterableOnce[R]): Dataset[R] =
+    pages.flatMap { page =>
+      val toRows = rows(page)
+      Extract.docs(page).flatMap(doc => toRows(docToTriples(doc, normalizeBNodes, null, contextCache)))
+    }
+
+  /** End-to-end: pages → deduplicated triples. Quarantined documents are
+    * dropped without being counted ([[emitKeyed]] keeps them). The only
+    * shuffle is the dedup hash-aggregate. */
   def pipeline(pages: Dataset[Page], normalizeBNodes: Boolean = false,
-               contextCache: Map[String, String] = Map.empty): Dataset[Triple] =
-    dedup(triplesFused(pages, normalizeBNodes, contextCache))
-
-  /** One page's extracted documents — THE extraction enumeration (block
-    * order, indexing, microdata offset) shared by every emit variant;
-    * a change here changes all of them together (review r5: three
-    * verbatim copies risked silent divergence). */
-  private def pageDocs(page: Page): Iterator[ExtractedDoc] = {
-    val html = new String(page.html, java.nio.charset.StandardCharsets.UTF_8)
-    val blocks = Extract.scriptBlocksTolerant(html)
-    val micro = Extract.microdataBlocks(html)
-    blocks.iterator.zipWithIndex.map { case (p, i) =>
-      ExtractedDoc(page.url, i, p, "jsonld")
-    } ++ micro.iterator.zipWithIndex.map { case (p, i) =>
-      ExtractedDoc(page.url, blocks.size + i, p, "microdata")
-    }
-  }
-
-  /** The fused narrow stage without the dedup shuffle. */
-  def triplesFused(pages: Dataset[Page], normalizeBNodes: Boolean = false,
-                   contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
+               contextCache: Map[String, String] = Map.empty): Dataset[Triple] = {
     import pages.sparkSession.implicits._
-    pages.flatMap { page =>
-      pageDocs(page).flatMap { doc =>
-        docToTriples(doc, normalizeBNodes, null, contextCache) match {
-          case Right(t) => t
-          case Left(_)  => Vector.empty[Triple]
-        }
-      }
-    }
+    dedup(emit(pages, normalizeBNodes, contextCache)(_ => _.getOrElse(Vector.empty)))
   }
 
-  /** The fused narrow stage with each emitted triple carrying its source
-    * url — the provenance emission. Same single-decode extraction as
-    * [[triplesFused]], one extra string column, still zero shuffles;
-    * the per-triple source table this produces is what
-    * [[provenance]] aggregates (and at production scale the artifact
-    * you'd persist bucketed by subj next to the deduplicated triples). */
+  /** Every emitted triple with its source url, not deduplicated — the
+    * provenance emission: one extra string column, zero shuffles; the
+    * per-triple source table this produces is what [[provenance]]
+    * aggregates (and at production scale the artifact you'd persist
+    * bucketed by subj next to the deduplicated triples). Quarantined
+    * documents are dropped. */
   def triplesWithSource(pages: Dataset[Page],
-      contextCache: Map[String, String] = Map.empty): org.apache.spark.sql.DataFrame = {
+      contextCache: Map[String, String] = Map.empty): DataFrame = {
     import pages.sparkSession.implicits._
-    pages.flatMap { page =>
-      pageDocs(page).flatMap { doc =>
-        docToTriples(doc, normalizeBNodes = false, null, contextCache) match {
-          case Right(ts) => ts.map(t => (page.url, t.subj, t.pred, t.objKind,
-            t.objValue, t.objDatatype, t.objLang, t.graph))
-          case Left(_) => Vector.empty
-        }
-      }
+    emit(pages, normalizeBNodes = false, contextCache) { page =>
+      _.fold(_ => Vector.empty, _.map(t => (page.url, t.subj, t.pred, t.objKind,
+        t.objValue, t.objDatatype, t.objLang, t.graph)))
     }.toDF("url", "subj", "pred", "objKind", "objValue",
       "objDatatype", "objLang", "graph")
   }
@@ -187,32 +166,44 @@ object TripleEmit {
     * Scale shape: one aggregation keyed by the 7 triple columns; the
     * distinct-url count is Spark's standard two-phase distinct agg,
     * partial map-side. */
-  def provenance(withSource: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  def provenance(withSource: DataFrame): DataFrame =
     withSource
       .groupBy(col("subj"), col("pred"), col("objKind"), col("objValue"),
         col("objDatatype"), col("objLang"), col("graph"))
       .agg(countDistinct(col("url")).as("n_sources"),
         min(col("url")).as("first_url"))
-  }
 
-  /** Single-pass keyed emit for the resumable job: the same fused narrow
-    * stage, but every output row carries the page's lineage partition key
-    * and quarantine rows ride along as kind=1 instead of being recomputed
-    * in a second full pass (VERDICT.md #7 / round-1 KgRun). */
+  /** Single-pass keyed emit for the resumable job: every output row
+    * carries the page's lineage partition key (computed once per page),
+    * and quarantine rows ride along instead of being recomputed in a
+    * second full pass (VERDICT.md #7 / round-1 KgRun). Not deduplicated;
+    * [[keyedTriples]] and [[keyedQuarantine]] split the output. */
   def emitKeyed(pages: Dataset[Page], normalizeBNodes: Boolean = false,
                 contextCache: Map[String, String] = Map.empty): Dataset[EmitRow] = {
     import pages.sparkSession.implicits._
-    pages.flatMap { page =>
+    emit(pages, normalizeBNodes, contextCache) { page =>
       val key = Lineage.hostBucket(page.url)
-      pageDocs(page).flatMap { doc =>
-        docToTriples(doc, normalizeBNodes, null, contextCache) match {
-          case Right(ts) => ts.map(t => EmitRow(key, 0, t.subj, t.pred, t.objKind,
-            t.objValue, t.objDatatype, t.objLang, t.graph, null, -1, null, null))
-          case Left(q) => Vector(EmitRow(key, 1, null, null, 0, null, null, null, null,
-            q.url, q.block_idx, q.errorCode, q.errorDetail))
-        }
-      }
+      _.fold(q => Vector(EmitRow(key, 1, null, null, 0, null, null, null, null,
+          q.url, q.block_idx, q.errorCode, q.errorDetail)),
+        _.map(t => EmitRow(key, 0, t.subj, t.pred, t.objKind,
+          t.objValue, t.objDatatype, t.objLang, t.graph, null, -1, null, null)))
     }
   }
+
+  /** The triple rows of [[emitKeyed]]'s output (kind 0): the 7 triple
+    * columns plus `partition_key`, deduplicated within the partition key
+    * (keys are host-derived, so a page's triples always land in the same
+    * partition; global cross-host dedup is a downstream compaction). */
+  def keyedTriples(emitted: Dataset[_]): DataFrame =
+    emitted.filter(col("kind") === 0)
+      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
+        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
+      .dropDuplicates()
+
+  /** The quarantine rows of [[emitKeyed]]'s output (kind 1): `url`,
+    * `block_idx`, `errorCode`, `errorDetail` and `partition_key`. */
+  def keyedQuarantine(emitted: Dataset[_]): DataFrame =
+    emitted.filter(col("kind") === 1)
+      .select(col("url"), col("block_idx"), col("errorCode"), col("errorDetail"),
+        col("partition_key"))
 }

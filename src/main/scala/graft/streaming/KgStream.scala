@@ -70,16 +70,9 @@ object KgStream {
     * effective exactly-once. Readers scan `$outDir/triples` and partition
     * discovery exposes `batch` + `partition_key` as partition columns. */
   private[streaming] def writeBatch(batch: DataFrame, batchId: Long, outDir: String): Unit = {
-    val triples = batch.filter(col("kind") === 0)
-      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
-      .dropDuplicates()
-    triples.write.mode("overwrite").partitionBy("partition_key")
+    TripleEmit.keyedTriples(batch).write.mode("overwrite").partitionBy("partition_key")
       .parquet(s"$outDir/triples/batch=$batchId")
-    val quarantine = batch.filter(col("kind") === 1)
-      .select(col("url"), col("block_idx"), col("errorCode"), col("errorDetail"),
-        col("partition_key"))
-    quarantine.write.mode("overwrite").partitionBy("partition_key")
+    TripleEmit.keyedQuarantine(batch).write.mode("overwrite").partitionBy("partition_key")
       .parquet(s"$outDir/quarantine/batch=$batchId")
   }
 

@@ -8,12 +8,8 @@ class CompactSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
   test("compaction removes cross-partition duplicates and buckets by subject") {
-    val emitted = TripleEmit.emitKeyed(PageGen.pages(spark, 400, 42L, partitions = 4))
-      .filter(col("kind") === 0).toDF()
-    val perPartitionDeduped = emitted
-      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
-      .dropDuplicates()
+    val perPartitionDeduped = TripleEmit.keyedTriples(
+      TripleEmit.emitKeyed(PageGen.pages(spark, 400, 42L, partitions = 4)))
     val compacted = KgCompact.compact(perPartitionDeduped, buckets = 16)
     val globalDistinct = perPartitionDeduped.drop("partition_key").distinct().count()
     assert(compacted.count() == globalDistinct)

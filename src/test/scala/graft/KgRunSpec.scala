@@ -10,36 +10,37 @@ import graft.pipeline._
 class KgRunSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
+  /** The job's JSON report as a map of its top-level fields. */
+  private def report(line: String): Map[String, graft.jsonld.JV] = {
+    val o = graft.jsonld.Json.parse(line).asInstanceOf[graft.jsonld.JObj]
+    o.keys.map(k => k -> o(k)).toMap
+  }
+
   test("resumable job: write, audit, publish, resume-as-noop") {
+    import graft.jsonld.{JLong, JStr}
     val out = java.nio.file.Files.createTempDirectory("kgrun").toString
     val nPages = 300L
 
-    // first run (inline KgRun body — main() would create its own session)
-    val pages = PageGen.pages(spark, nPages, 42L, 8).toDF()
-    val manifest0 = Lineage.readManifest(spark, s"$out/lineage")
-    val pending = Lineage.pendingPages(pages, manifest0).cache()
-    assert(pending.count() == nPages, "fresh run: everything pending")
-
-    import spark.implicits._
-    val pendingPages = pending.drop("partition_key").as[Page]
-    val emitted = TripleEmit.emitKeyed(pendingPages).persist()
-    val triplesKeyed = emitted.filter(col("kind") === 0)
-      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
-      .dropDuplicates()
-    Lineage.writeWithLineage(spark, triplesKeyed, pending, s"$out/triples", s"$out/lineage")
-    emitted.unpersist()
+    // first run: everything pending
+    val pages = PageGen.pages(spark, nPages, 42L, 8)
+    val first = report(KgRun.run(spark, pages, out))
+    assert(first("status") == JStr("done"))
+    assert(first("pages") == JLong(nPages))
+    assert(first("pending") == JLong(nPages), "fresh run: everything pending")
 
     val written = spark.read.parquet(s"$out/triples")
     assert(written.count() > 0)
+    assert(first("triples_total") == JLong(written.count()))
     // manifest triple counts equal the written partition counts
     val manifest = Lineage.readManifest(spark, s"$out/lineage")
     val mTotal = manifest.agg(sum(col("triple_count"))).collect()(0).getLong(0)
     assert(mTotal == written.count())
 
     // second run: nothing pending
-    val pending2 = Lineage.pendingPages(pages, manifest)
+    val pending2 = Lineage.pendingPages(pages.toDF(), manifest)
     assert(pending2.count() == 0, "identical input must resume as a no-op")
+    val second = report(KgRun.run(spark, pages, out))
+    assert(second("status") == JStr("up-to-date") && second("pending") == JLong(0))
 
     // a NEW page invalidates exactly its partition's fingerprint
     val morePages = PageGen.pages(spark, nPages + 1, 42L, 8).toDF()
@@ -48,8 +49,8 @@ class KgRunSpec extends AnyFunSuite {
     assert(pending3.count() > 0 && changedKeys == 1,
       s"one new page must re-open exactly one partition, got $changedKeys")
 
-    // adjacency over the written table
-    val adj = GraphMaterialize.adjacency(written.drop("partition_key").as[Triple])
+    // adjacency the job wrote over the written table
+    val adj = spark.read.parquet(s"$out/adjacency")
     assert(adj.count() > 0)
     assert(adj.filter(col("truncated")).count() == 0, "no hub exceeds the cap at this scale")
   }

@@ -12,7 +12,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val n = 100L
     val pages = PageGen.pages(spark, n, seed = 42L, partitions = 4)
-    val extracted = Extract.extract(pages)
+    val extracted = pages.flatMap(Extract.docs)
       .filter(col("kind") === "jsonld")
       .as[ExtractedDoc].collect()
       .map(d => (d.url, d.block_idx) -> d.payload).toMap
@@ -102,25 +102,21 @@ class PipelineSpec extends AnyFunSuite {
 
   test("bad documents are quarantined, not fatal") {
     import spark.implicits._
-    val docs = Seq(
-      ExtractedDoc("https://x.example/ok", 0,
-        """{"@id":"http://e/s","http://e/p":"v"}""", "jsonld"),
-      ExtractedDoc("https://x.example/bad", 0, """{"@id": nope}""", "jsonld")
-    ).toDS()
-    val ts = TripleEmit.triples(docs).collect()
-    val qs = TripleEmit.quarantine(docs).collect()
+    val emitted = TripleEmit.emitKeyed(Seq(
+      SparkTestBase.page("https://x.example/ok", """{"@id":"http://e/s","http://e/p":"v"}"""),
+      SparkTestBase.page("https://x.example/bad", """{"@id": nope}""")).toDS())
+    val ts = TripleEmit.keyedTriples(emitted).collect()
+    val qs = TripleEmit.keyedQuarantine(emitted).collect()
     assert(ts.length == 1)
-    assert(qs.length == 1 && qs.head.url.endsWith("/bad"))
+    assert(qs.length == 1 && qs.head.getAs[String]("url").endsWith("/bad"))
   }
 
   test("lineage: second run has no pending partitions (resume idempotence)") {
     val dir = java.nio.file.Files.createTempDirectory("lineage").toString
     val pages = PageGen.pages(spark, 80, 42L, partitions = 4).toDF()
     val keyed = pages.withColumn("partition_key", Lineage.partitionKeyCol)
-    val triplesKeyed = TripleEmit.emitKeyed(PageGen.pages(spark, 80, 42L, partitions = 4))
-      .filter(col("kind") === 0)
-      .select(col("subj"), col("pred"), col("objKind"), col("objValue"),
-        col("objDatatype"), col("objLang"), col("graph"), col("partition_key"))
+    val triplesKeyed = TripleEmit.keyedTriples(
+      TripleEmit.emitKeyed(PageGen.pages(spark, 80, 42L, partitions = 4)))
     Lineage.writeWithLineage(spark, triplesKeyed, keyed, s"$dir/triples", s"$dir/manifest")
     val manifest = Lineage.readManifest(spark, s"$dir/manifest")
     val pending = Lineage.pendingPages(pages, manifest)
@@ -312,15 +308,15 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val ctxUrl = "https://ctx.example/v1.jsonld"
     val cache = Map(ctxUrl -> """{"@context":{"name":"http://schema.org/name"}}""")
-    val doc = ExtractedDoc("https://a/p", 0,
-      s"""{"@context":"$ctxUrl","@id":"https://a/x","name":"Thing"}""", "jsonld")
-    val ds = Seq(doc).toDS()
-    val ts = TripleEmit.triples(ds, contextCache = cache).collect()
+    val pages = Seq(SparkTestBase.page("https://a/p",
+      s"""{"@context":"$ctxUrl","@id":"https://a/x","name":"Thing"}""")).toDS()
+    val ts = TripleEmit.keyedTriples(TripleEmit.emitKeyed(pages, contextCache = cache))
+      .drop("partition_key").as[Triple].collect()
     assert(ts.toSeq == Seq(Triple("https://a/x", "http://schema.org/name", 2, "Thing",
       "http://www.w3.org/2001/XMLSchema#string", null, "@default")), ts.toSeq)
     // without the cache the same doc quarantines — never a task failure
-    val q = TripleEmit.quarantine(ds).collect()
-    assert(q.length == 1 && q.head.errorCode == "loading remote context failed", q.toSeq)
+    val q = TripleEmit.keyedQuarantine(TripleEmit.emitKeyed(pages)).collect()
+    assert(q.length == 1 && q.head.getAs[String]("errorCode") == "loading remote context failed", q.toSeq)
   }
 
   test("corpus framing embeds 1-hop neighborhoods of type-matched roots") {

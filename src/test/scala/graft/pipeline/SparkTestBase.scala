@@ -12,4 +12,10 @@ object SparkTestBase {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** A page whose html holds each payload in its own script block. */
+  def page(url: String, payloads: String*): Page =
+    Page(url, new java.sql.Timestamp(0L),
+      PageGen.htmlShell(url, payloads, "filler").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      "filler", "en")
 }

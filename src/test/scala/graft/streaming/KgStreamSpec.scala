@@ -27,8 +27,8 @@ class KgStreamSpec extends AnyFunSuite {
       .distinct().collect().map(_.toString).sorted.toSeq
     val streamed = spark.read.parquet(s"$outDir/triples")
     val streamedKeys = key(streamed)
-    val batchKeys = key(TripleEmit.emitKeyed(PageGen.pages(spark, 200, 42L, partitions = 4))
-      .filter(col("kind") === 0).toDF())
+    val batchKeys = key(TripleEmit.keyedTriples(
+      TripleEmit.emitKeyed(PageGen.pages(spark, 200, 42L, partitions = 4))))
     assert(streamedKeys == batchKeys,
       s"streamed distinct triples (${streamedKeys.size}) must equal the batch spine (${batchKeys.size})")
     val rowsAfterFirstDrain = streamed.count()
