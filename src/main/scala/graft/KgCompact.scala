@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Downstream compaction: globally deduplicate the triples table across
@@ -29,14 +29,8 @@ object KgCompact {
     val triplesDir = args(0)
     val outDir = args(1)
     val buckets = if (args.length > 2) args(2).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
+    spark.conf.set("spark.sql.shuffle.partitions", "256")
     val in = spark.read.parquet(triplesDir)
     val out = compact(in, buckets)
     out.write.mode(SaveMode.Overwrite).partitionBy("subj_bucket").parquet(outDir)

@@ -19,20 +19,22 @@ object KgRun {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/kg_out"
     val nPages = if (args.length > 1) args(1).toLong else 100000L
-    val cores = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(run(spark, PageGen.pages(spark, nPages, 42L, cores.toInt * 4), outDir))
+    val cores = if (args.length > 2) args(2).toInt else Sessions.defaultCores
+    val spark = Sessions.local(cores)
+    println(run(spark, PageGen.pages(spark, nPages, 42L, cores * 4), outDir))
     spark.stop()
   }
 
+  /** Distinct quarantine error codes one run may report: the codes are a
+    * closed set (the `JsonLdError.Code` texts, `internal error` and
+    * `stack overflow`), well under this bound. */
+  private val MaxQuarantineCodes = 64
+
   /** The job over `pages` into `outDir` (tables `triples`, `lineage`,
-    * `quarantine`, `adjacency`); returns its one-line JSON report. */
+    * `quarantine`, `adjacency`); returns its one-line JSON report.
+    * `triples_total` counts the whole triples table; `quarantined`, its
+    * split `quarantined_by_code` and `observed.triples_written` count
+    * this run's rows only. */
   def run(spark: SparkSession, pages: Dataset[Page], outDir: String): String = {
     import spark.implicits._
     val triplesPath = s"$outDir/triples"
@@ -73,6 +75,11 @@ object KgRun {
         TripleEmit.keyedQuarantine(emitted)
           .write.mode(SaveMode.Overwrite).partitionBy("partition_key").parquet(quarantinePath)
       })
+    // this run's quarantine rows by error code, from the persisted emit
+    // rather than a read-back of the quarantine table
+    val byCode = Bounded.collect(
+      TripleEmit.keyedQuarantine(emitted).groupBy(col("errorCode")).count().as[(String, Long)],
+      MaxQuarantineCodes, "quarantine error codes").sorted
     emitted.unpersist()
     pending.unpersist()
 
@@ -81,12 +88,8 @@ object KgRun {
       .write.mode(SaveMode.Overwrite).parquet(adjacencyPath)
 
     val nTriples = written.count()
-    // a clean corpus writes an empty quarantine dir (no parquet footers) —
-    // schema inference fails on read-back, which just means 0 rows
-    val nQuarantine =
-      try spark.read.parquet(quarantinePath).count()
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+    val codes = byCode.map { case (code, n) => s""""$code":$n""" }.mkString("{", ",", "}")
     val metrics = obs.get.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    s"""{"job":"kg","status":"done","pages":$nPages,"pending":$nPending,"triples_total":$nTriples,"quarantined":$nQuarantine,"observed":$metrics,"out":"$outDir"}"""
+    s"""{"job":"kg","status":"done","pages":$nPages,"pending":$nPending,"triples_total":$nTriples,"quarantined":${byCode.map(_._2).sum},"quarantined_by_code":$codes,"observed":$metrics,"out":"$outDir"}"""
   }
 }

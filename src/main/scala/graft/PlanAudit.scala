@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Physical-plan audit of the headline queries: prints the properties
   * that matter at 100 TB — scan pushdown (PushedFilters/ReadSchema),
@@ -8,7 +9,15 @@ import org.apache.spark.sql.SparkSession
   * and the shuffle count — so plan regressions are visible in review,
   * not just wall-clock. Output is pasted into BENCH/PLANS.md per round.
   *
-  * Usage: sbt "runMain graft.PlanAudit /root/testdata/sf0.01"
+  * Usage: sbt "runMain graft.PlanAudit <sfDir> [--dump <outDir> <suffix>] [q1 q2 ...]"
+  *
+  * With `--dump`, each query's `.explain("formatted")` is also written
+  * to `<outDir>/<query>_<suffix>.txt` — the optimization-round evidence
+  * artifact (`plans/r06/<query>_{before,after}.txt`) — and the queries
+  * are every SparkEntry query in name order rather than [[audited]].
+  * Several operators are eager by contract (they localCheckpoint during
+  * DataFrame construction), so their plan is the post-checkpoint
+  * consumer plan.
   */
 object PlanAudit {
   /** Audited query names — a val on the object (not a local) so
@@ -45,28 +54,38 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    // optional trailing args: audit only these names (incremental rounds
+    val (dump, rest) = args.drop(1).toList match {
+      case "--dump" :: out :: suffix :: names => (Some((Paths.get(out), suffix)), names)
+      case "--dump" :: _ => throw new IllegalArgumentException(
+        "usage: PlanAudit <sfDir> [--dump <outDir> <suffix>] [names...]")
+      case names => (None, names)
+    }
+    // optional trailing args: only these names (incremental rounds
     // re-audit just the queries they touched)
-    val subset = args.drop(1).toSet
-    val toAudit = if (subset.isEmpty) audited else audited.filter(subset)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static plans for the audit: AQE re-plans at runtime (and is ON in
-      // every real run); disabling it here exposes the codegen spans and
-      // join choices Catalyst makes from statistics alone
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val subset = rest.toSet
+    val unknown = subset.diff(SparkEntry.queries.keySet)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
+        "a typo here would silently leave a stale plan file in place")
+    val names = (if (dump.isEmpty) audited else SparkEntry.queries.keys.toSeq.sorted)
+      .filter(n => subset.isEmpty || subset(n))
+    dump.foreach { case (dir, _) => Files.createDirectories(dir) }
+    val spark = Sessions.local()
+    // static plans for the audit: AQE re-plans at runtime (and is ON in
+    // every real run); disabling it here exposes the codegen spans and
+    // join choices Catalyst makes from statistics alone
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
-    toAudit.foreach { name =>
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
       println(s"\n===== $name =====")
-      summarize(name, plan)
+      summarize(name, df.queryExecution.executedPlan.toString)
+      dump.foreach { case (dir, suffix) =>
+        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        Files.write(dir.resolve(s"${name}_$suffix.txt"), txt.getBytes("UTF-8"),
+          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+        println(s"dumped $name")
+      }
     }
     spark.stop()
   }

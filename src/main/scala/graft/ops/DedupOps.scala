@@ -355,8 +355,8 @@ object DedupOps {
     // the set-array scan feeds THREE per-row-heavy branches (prefix
     // explode + both verify sides); a compact persisted artifact would
     // otherwise run each fused scan→explode stage on its split count —
-    // one core, measured 0.5–0.9 s/branch at bench scale
-    // (QueryStageProbe) — while the spread is a no-op on the
+    // one core, measured 0.5–0.9 s/branch at bench scale in a
+    // per-stage profile — while the spread is a no-op on the
     // production multi-file shape
     val sets = Spread.minParallel(sets0, "doc_id")
     val dt = sets.select(col("doc_id"), size(col("shingles")).cast("long").as("m"),

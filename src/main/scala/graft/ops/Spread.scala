@@ -13,33 +13,31 @@ import org.apache.spark.sql.functions.col
   * whole fused scan→tokenize/explode/hash stage on ONE core no matter
   * how many the session has (measured: the 5000-row single-file
   * `shingle_sets` scan+explode+agg stage ran 1 task for 0.5–0.9 s while
-  * 31 cores idled, QueryStageProbe). Operators whose first phase does
-  * heavy per-row compute call [[minParallel]] on their input: when the
-  * scan already carries at least the session's configured shuffle
-  * parallelism — the production multi-file shape at corpus scale — it
-  * is a NO-OP and adds no exchange; only a narrow input pays one small
-  * hash exchange on `key` to unlock every core. The target comes from
-  * `spark.sql.shuffle.partitions` (session-parameterised: local[cpus]
-  * here, cluster-set in production), and the EXPLICIT partition number
-  * keeps AQE from byte-coalescing the spread back down — these rows are
-  * small; it is the per-row work downstream that needs the cores.
+  * 31 cores idled, in a per-stage profile). Operators whose first phase
+  * does heavy per-row compute call [[minParallel]] on their input: when
+  * the input already has at least the target's partitions — the
+  * production multi-file shape at corpus scale — it is a NO-OP and adds
+  * no exchange; only a narrow input pays one small hash exchange on
+  * `key` to unlock every core. The target is the smaller of
+  * `spark.sql.shuffle.partitions` and the session's default parallelism
+  * (more partitions than cores buys nothing), and the EXPLICIT partition
+  * number keeps AQE from byte-coalescing the spread back down — these
+  * rows are small; it is the per-row work downstream that needs the
+  * cores.
   */
 object Spread {
   /** CONTRACT: pass a raw file read or an already-materialized
-    * (checkpointed) frame. The partition probe below goes through
-    * `df.rdd`, and on a frame with UNMATERIALIZED upstream exchanges AQE
-    * materializes those query stages right here — the caller would then
-    * re-execute them at action time. A bare file scan has no exchanges
-    * (the probe is job-free there), and a many-file input short-circuits
-    * on file metadata alone. */
+    * (checkpointed) frame. The split probe below goes through `df.rdd`:
+    * on a file scan or a checkpointed frame it starts no job, while on a
+    * frame with UNMATERIALIZED upstream exchanges AQE would materialize
+    * those query stages right here, and the caller would re-execute them
+    * at action time. The probe counts the scan's splits, not its files:
+    * many small files bin-pack into fewer splits. */
   def minParallel(df: DataFrame, key: String): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    // a file-backed input with >= target files is parallel enough by
-    // construction — decided from metadata, no plan compilation at all
-    // (and crucially no repartition: at corpus scale the input is large
-    // and an exchange here would shuffle all of it for nothing)
-    if (df.inputFiles.length >= target) df
-    else if (df.rdd.getNumPartitions >= target) df
+    val session = df.sparkSession
+    val target = math.min(session.sessionState.conf.numShufflePartitions,
+      session.sparkContext.defaultParallelism)
+    if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, col(key))
   }
 }

@@ -61,15 +61,16 @@ object Extract {
     out.result()
   }
 
+  private val ScopeP = java.util.regex.Pattern.compile(
+    "<[a-zA-Z0-9]+\\b[^>]*\\bitemscope\\b[^>]*\\bitemtype\\s*=\\s*\"([^\"]+)\"[^>]*>")
+  private val PropP = java.util.regex.Pattern.compile(
+    "<[a-zA-Z0-9]+\\b[^>]*\\bitemprop\\s*=\\s*\"([^\"]+)\"[^>]*>([^<]*)<")
+
   /** Minimal microdata harvest (itemscope/itemtype/itemprop on a single
     * element level) → JSON-LD object per top-level itemscope. */
   def microdataBlocks(html: String): Vector[String] = {
-    val scopeP = java.util.regex.Pattern.compile(
-      "<[a-zA-Z0-9]+\\b[^>]*\\bitemscope\\b[^>]*\\bitemtype\\s*=\\s*\"([^\"]+)\"[^>]*>")
-    val propP = java.util.regex.Pattern.compile(
-      "<[a-zA-Z0-9]+\\b[^>]*\\bitemprop\\s*=\\s*\"([^\"]+)\"[^>]*>([^<]*)<")
     val out = Vector.newBuilder[String]
-    val sm = scopeP.matcher(html)
+    val sm = ScopeP.matcher(html)
     while (sm.find()) {
       val itemtype = sm.group(1)
       val rest = html.substring(sm.end())
@@ -77,7 +78,7 @@ object Extract {
         val nextScope = rest.indexOf("itemscope")
         if (nextScope >= 0) rest.substring(0, nextScope) else rest
       }
-      val pm = propP.matcher(limit)
+      val pm = PropP.matcher(limit)
       val props = new ArrayBuffer[(String, String)]
       while (pm.find()) props += ((pm.group(1), pm.group(2)))
       val sb = new java.lang.StringBuilder

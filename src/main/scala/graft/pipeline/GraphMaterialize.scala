@@ -698,7 +698,7 @@ object GraphMaterialize {
     * half-step — the eager round-5 form ran three jobs per half-step
     * (raw checkpoint, scalar collect, rescale checkpoint; 18+ jobs at
     * iterations=3), this runs the caller's one action plus the bounded
-    * broadcast sub-stages (A/B in HitsProbe: ~20-25% faster at sf0.1,
+    * broadcast sub-stages (same-window A/B: ~20-25% faster at sf0.1,
     * and at cluster scale each removed collect is a removed
     * full-pipeline barrier). `raw` is lazily checkpointed because both
     * the max aggregate and the rescale join consume it; plans stay

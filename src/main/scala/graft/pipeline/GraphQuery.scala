@@ -227,9 +227,9 @@ object GraphQuery {
     * Eager by contract, like [[GraphMaterialize.hubScores]]; checkpoint
     * blocks (edges + one per level) carry no named cache entry and are
     * reclaimed by the ContextCleaner once the returned frame is
-    * unreferenced — a standalone 6-pass repeat probe
-    * (ClosureRepeatProbe) measures flat per-pass times, no block
-    * accumulation (the in-bench pass growth was session interference). */
+    * unreferenced — a standalone 6-pass repeat run measured flat
+    * per-pass times, no block accumulation (the in-bench pass growth
+    * was session interference). */
   def pathClosure(triples: DataFrame, pred: String, maxDepth: Int,
       maxDegree: Int = 1024): DataFrame =
     pathClosure(triples, Seq(pred), maxDepth, maxDegree)

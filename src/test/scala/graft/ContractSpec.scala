@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    correctness gate);
   *  - every plan-audited name is a real query;
   *  - names follow the q_* convention the bench/correctness tooling
-  *    sorts and reports on. */
+  *    sorts and reports on;
+  *  - sessions are built by the one factory, [[Sessions]]. */
 class ContractSpec extends AnyFunSuite {
 
   test("queries and oracles are exactly 1:1") {
@@ -48,5 +49,26 @@ class ContractSpec extends AnyFunSuite {
       assert(n == "q1_agg" || n.startsWith("q_"), s"unconventional name: $n")
       assert(!n.contains(" ") && n == n.toLowerCase, s"unsortable name: $n")
     }
+  }
+
+  /** Files allowed to build a session themselves: the factory, and the
+    * measurement harness, which stays byte-identical. */
+  private val sessionBuilders =
+    Set("graft/Sessions.scala", "graft/Bench.scala", "graft/Verify.scala")
+
+  test("only the session factory and the frozen harness build sessions") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val st = Files.walk(root)
+    val builders =
+      try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .filter(p => Files.readString(p).contains("SparkSession.builder"))
+        .map(p => root.relativize(p).toString).toSet
+      finally st.close()
+    assert(builders.contains("graft/Sessions.scala"))
+    assert((builders -- sessionBuilders).isEmpty,
+      s"hand-rolled SparkSession.builder outside graft.Sessions: ${(builders -- sessionBuilders).toSeq.sorted}")
   }
 }

@@ -10,11 +10,15 @@ import graft.pipeline._
 class KgRunSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
-  /** The job's JSON report as a map of its top-level fields. */
-  private def report(line: String): Map[String, graft.jsonld.JV] = {
-    val o = graft.jsonld.Json.parse(line).asInstanceOf[graft.jsonld.JObj]
+  /** A JSON object's fields as a map. */
+  private def fields(v: graft.jsonld.JV): Map[String, graft.jsonld.JV] = {
+    val o = v.asInstanceOf[graft.jsonld.JObj]
     o.keys.map(k => k -> o(k)).toMap
   }
+
+  /** The job's JSON report as a map of its top-level fields. */
+  private def report(line: String): Map[String, graft.jsonld.JV] =
+    fields(graft.jsonld.Json.parse(line))
 
   test("resumable job: write, audit, publish, resume-as-noop") {
     import graft.jsonld.{JLong, JStr}
@@ -80,5 +84,30 @@ class KgRunSpec extends AnyFunSuite {
     val m = Lineage.readManifest(spark, s"$out/lineage")
       .select("partition_key", "triple_count").as[(String, Long)].collect().toMap
     assert(m("hbA") == 1L && m("hbB") == 0L, s"manifest must match data: $m")
+  }
+
+  test("quarantine is reported by error code from the run, not read back") {
+    import spark.implicits._
+    import graft.jsonld.JLong
+    val out = java.nio.file.Files.createTempDirectory("kgrunq")
+    // a partition no run writes holds a file that is not parquet: any
+    // read-back of the quarantine table would fail on it
+    val stale = out.resolve("quarantine/partition_key=stale")
+    java.nio.file.Files.createDirectories(stale)
+    java.nio.file.Files.writeString(stale.resolve("part-0.parquet"), "not parquet")
+    val bad = Seq(
+      SparkTestBase.page("https://bad.example/parse", """{"@id": nope}"""),
+      SparkTestBase.page("https://bad.example/ctx",
+        """{"@context":"https://ctx.example/missing.jsonld","@id":"https://a/x"}"""))
+    val planted = report(KgRun.run(spark,
+      PageGen.pages(spark, 100, 42L, 4).union(bad.toDS()), out.toString))
+    val byCode = fields(planted("quarantined_by_code"))
+    assert(byCode == Map("parse error" -> JLong(1), "loading remote context failed" -> JLong(1)))
+    assert(planted("quarantined") == JLong(byCode.values.collect { case JLong(n) => n }.sum))
+
+    val clean = report(KgRun.run(spark, PageGen.pages(spark, 100, 42L, 4),
+      java.nio.file.Files.createTempDirectory("kgrunclean").toString))
+    assert(fields(clean("quarantined_by_code")).isEmpty)
+    assert(clean("quarantined") == JLong(0))
   }
 }

@@ -5,13 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Shared local session for all Spark suites (one JVM, forked by sbt with
   * the JDK17 add-opens flags from build.sbt). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = graft.Sessions.local(4)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s
+  }
 
   /** A page whose html holds each payload in its own script block. */
   def page(url: String, payloads: String*): Page =
