@@ -8,7 +8,10 @@ import graft.pipeline._
   * of the north rule): pages → pending-partition filter → extract →
   * expand → toRDF → dedup → partitioned write + lineage manifest +
   * adjacency table. Re-running after a crash (or with new input) only
-  * processes partitions whose fingerprint is new/changed.
+  * processes partitions whose fingerprint is new/changed. The report's
+  * `triples_total` is the published manifest's per-partition
+  * `triple_count` summed, so the job never counts the triples table; the
+  * table is read back only as adjacency's input.
   *
   * [[run]] is the job; `main` only builds the session and the generated
   * pages, and `KgRunSpec` runs [[run]] itself.
@@ -32,9 +35,9 @@ object KgRun {
 
   /** The job over `pages` into `outDir` (tables `triples`, `lineage`,
     * `quarantine`, `adjacency`); returns its one-line JSON report.
-    * `triples_total` counts the whole triples table; `quarantined`, its
-    * split `quarantined_by_code` and `observed.triples_written` count
-    * this run's rows only. */
+    * `triples_total` counts the whole triples table, from the manifest;
+    * `quarantined`, its split `quarantined_by_code` and
+    * `observed.triples_written` count this run's rows only. */
   def run(spark: SparkSession, pages: Dataset[Page], outDir: String): String = {
     import spark.implicits._
     val triplesPath = s"$outDir/triples"
@@ -83,11 +86,10 @@ object KgRun {
     emitted.unpersist()
     pending.unpersist()
 
-    val written = spark.read.parquet(triplesPath)
-    GraphMaterialize.adjacency(written.drop("partition_key").as[Triple])
+    GraphMaterialize.adjacency(spark.read.parquet(triplesPath).drop("partition_key").as[Triple])
       .write.mode(SaveMode.Overwrite).parquet(adjacencyPath)
 
-    val nTriples = written.count()
+    val nTriples = Lineage.readManifest(spark, manifestPath).map(_.triple_count).sum
     val codes = byCode.map { case (code, n) => s""""$code":$n""" }.mkString("{", ",", "}")
     val metrics = obs.get.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     s"""{"job":"kg","status":"done","pages":$nPages,"pending":$nPending,"triples_total":$nTriples,"quarantined":${byCode.map(_._2).sum},"quarantined_by_code":$codes,"observed":$metrics,"out":"$outDir"}"""

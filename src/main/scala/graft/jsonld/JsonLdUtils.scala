@@ -18,13 +18,11 @@ object JsonLdUtils {
   def isKeyword(s: String): Boolean = s != null && keywords.contains(s)
 
   def isString(v: JV): Boolean = v.isInstanceOf[JStr]
-  def isArray(v: JV): Boolean = v.isInstanceOf[JArr]
   def isObject(v: JV): Boolean = v.isInstanceOf[JObj]
   def isList(v: JV): Boolean = v match { case o: JObj => o.containsKey("@list"); case _ => false }
   def isValue(v: JV): Boolean = v match { case o: JObj => o.containsKey("@value"); case _ => false }
 
   def asString(v: JV): String = v match { case JStr(s) => s; case _ => null }
-  def asBool(v: JV): Boolean = v match { case JBool(b) => b; case _ => false }
 
   /** token.Value<string>().Equals(s) with exceptions as false
     * (Util/JavaCompat.cs:63-73). */
@@ -190,58 +188,6 @@ object JsonLdUtils {
       case a: JArr => a.size > 0
       case _       => true
     })
-
-  def removeValue(subject: JObj, property: String, value: JObj, propertyIsArray: Boolean): Unit = {
-    // Port of the (quirky) reference: adds `value` rather than `e` on
-    // non-match in the array branch (Core/JsonLdUtils.cs:813-850).
-    val values = new JArr
-    subject(property) match {
-      case arr: JArr =>
-        arr.items.foreach(e => if (!refSafeTokenCompare(e, value)) values.add(value))
-      case other =>
-        if (!refSafeTokenCompare(other, value)) values.add(other)
-    }
-    if (values.size == 0) subject.remove(property)
-    else if (values.size == 1 && !propertyIsArray) subject.put(property, values(0))
-    else subject.put(property, values)
-  }
-
-  private def refSafeTokenCompare(a: JV, b: JV): Boolean = tokenEquals(a, b)
-
-  /** Core/JsonLdUtils.cs:423-455. */
-  def expandLanguageMap(languageMap: JObj): JArr = {
-    val rval = new JArr
-    val keys = languageMap.keys.sorted // lexicographic (ordinal)
-    keys.foreach { key =>
-      val vals = languageMap(key) match {
-        case a: JArr => a.items.toVector
-        case v       => Vector(v)
-      }
-      vals.foreach {
-        case JStr(item) =>
-          rval.add(JObj("@value" -> JStr(item), "@language" -> JStr(key.toLowerCase)))
-        case _ => throw new JsonLdError(JsonLdError.SyntaxError)
-      }
-    }
-    rval
-  }
-
-  /** Core/JsonLdUtils.cs:462-494. */
-  def validateTypeValue(v: JV): Unit = {
-    if (isNull(v)) throw new JsonLdError(JsonLdError.InvalidTypeValue, "\"@type\" value cannot be null")
-    v match {
-      case _: JStr => ()
-      case o: JObj if o.containsKey("@id") || o.size == 0 => ()
-      case a: JArr =>
-        val ok = a.items.forall {
-          case _: JStr => true
-          case o: JObj if o.containsKey("@id") => true
-          case _ => false
-        }
-        if (!ok) throw new JsonLdError(JsonLdError.SyntaxError)
-      case _ => throw new JsonLdError(JsonLdError.SyntaxError)
-    }
-  }
 
   /** Length-then-ordinal string order (Core/JsonLdUtils.cs:699-713). */
   def compareShortestLeast(a: String, b: String): Int =

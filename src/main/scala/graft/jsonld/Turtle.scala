@@ -170,8 +170,6 @@ object Turtle {
       if (stack.isEmpty) expectingBnodeClose = false
     }
 
-    def stackEmpty: Boolean = stack.isEmpty
-
     def advanceLinePosition(len: Int): Unit = {
       if (len > 0) {
         linePosition += len

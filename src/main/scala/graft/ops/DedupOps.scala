@@ -81,11 +81,6 @@ object DedupOps {
 
   // ---------------- MinHash + LSH ----------------
 
-  /** LSH bucket rows: (doc_id, sig, band, bucket) — the equi-join key
-    * space for candidate generation. */
-  def lshBuckets(documents: DataFrame, k: Int = 64, bands: Int = 16): DataFrame =
-    explodeBuckets(sketches(documents, k, bands))
-
   private def explodeBuckets(sk: DataFrame): DataFrame =
     sk.select(col("doc_id"), col("sig"),
       posexplode(col("band_buckets")).as(Seq("band", "bucket")))

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed in vectorized batches via
@@ -186,8 +185,4 @@ object MultimodalOps {
       }
     }
   }
-
-  /** Resize stub: emits metadata-updated rows (real impl re-encodes). */
-  def resize(media: Dataset[MediaRow], w: Int, h: Int): DataFrame =
-    media.toDF().withColumn("width", lit(w)).withColumn("height", lit(h))
 }

@@ -18,13 +18,15 @@ import java.sql.Timestamp
   * The manifest holds one row per host bucket (at most [[Buckets]]), so
   * it is driver-side metadata, not a table: the manifest is the NEWEST
   * complete snapshot file `snapshot-<n>.parquet` in the manifest
-  * directory. A publish writes the merged rows as one parquet file into
-  * the hidden `_staging` directory, renames it to the next snapshot
-  * number and only then deletes older snapshots, so a crash at any step
-  * leaves either the old or the new snapshot readable. A directory in the
-  * older layout (one `partition_key=hbN/` directory per bucket) still
-  * reads, and the next publish replaces it. The manifest directory is
-  * owned by this object: a publish deletes everything else in it.
+  * directory, which [[readManifest]], its one reader, returns as
+  * `LineageRow`s on the driver. A publish writes the merged rows as one
+  * parquet file into the hidden `_staging` directory, renames it to the
+  * next snapshot number and only then deletes older snapshots, so a
+  * crash at any step leaves either the old or the new snapshot readable.
+  * A directory in the older layout (one `partition_key=hbN/` directory
+  * per bucket) still reads, and the next publish replaces it. The
+  * manifest directory is owned by this object: a publish deletes
+  * everything else in it.
   * A real deployment swaps these methods for an Iceberg catalog without
   * touching the engine.
   */
@@ -77,58 +79,63 @@ object Lineage {
       }
     }
 
-  /** The rows of [[readManifest]]. */
-  private def manifestRows(spark: SparkSession, manifestPath: String): Seq[LineageRow] = {
+  private val ManifestEncoder = Encoders.product[LineageRow]
+
+  /** Load the lineage manifest as driver rows: the newest snapshot, or a
+    * directory in the older partitioned layout. A MISSING manifest is the
+    * normal first-run state and yields no rows, as does a directory
+    * holding only the staging directory of a first publish that crashed
+    * before its rename. A manifest that EXISTS but cannot be read fails
+    * loudly instead of silently falling back to empty (which would
+    * quietly schedule a full re-run — at 100 TB an expensive surprise an
+    * operator must opt into by deleting the manifest; VERDICT r4 #4):
+    * garbage bytes, an empty directory, more than [[Buckets]] rows, a
+    * missing column (it reads as null) or a mistyped one. The source is
+    * read with the `LineageRow` schema given, so a read is one bounded
+    * collect and no schema-inference job. */
+  def readManifest(spark: SparkSession, manifestPath: String): Seq[LineageRow] = {
     val dir = new Path(manifestPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val source =
-      if (!fs.exists(dir)) None
-      else {
-        val entries = fs.listStatus(dir).toSeq
-        snapshots(entries).maxByOption(_._1).map(_._2.toString).orElse(
-          if (entries.nonEmpty && entries.forall(_.getPath.getName == StagingDir)) None
-          else Some(manifestPath))
+    try {
+      val source =
+        if (!fs.exists(dir)) None
+        else {
+          val entries = fs.listStatus(dir).toSeq
+          val names = entries.map(_.getPath.getName)
+          snapshots(entries).maxByOption(_._1).map(_._2.toString).orElse {
+            if (names.nonEmpty && names.forall(_ == StagingDir)) None
+            else {
+              // given a schema, Spark reads a directory without data files as zero rows
+              require(names.exists(n => !n.startsWith("_") && !n.startsWith(".")),
+                "no snapshot and no data files")
+              Some(manifestPath)
+            }
+          }
+        }
+      source.fold(Seq.empty[LineageRow]) { src =>
+        val rows = Bounded.collect(spark.read.schema(ManifestEncoder.schema).parquet(src).as(ManifestEncoder),
+          Buckets, "lineage manifest rows").toSeq
+        rows.foreach(r => require(!r.productIterator.contains(null), s"a null field in $r"))
+        rows
       }
-    source.fold(Seq.empty[LineageRow]) { src =>
-      try Bounded.collect(spark.read.parquet(src)
-          .select(col("partition_key").cast("string"), col("input_fingerprint"),
-            col("triple_count"), col("status"), col("updated_at"))
-          .as(Encoders.product[LineageRow]), Buckets, s"lineage manifest at $src").toSeq
-      catch {
-        case e: Exception =>
-          throw new IllegalStateException(
-            s"lineage manifest at $manifestPath exists but is unreadable " +
-              "(corrupt or schema-drifted) — refusing to silently treat it as " +
-              "empty and re-run everything; delete the manifest to force a " +
-              "full re-run", e)
-      }
+    } catch {
+      case e: Exception =>
+        throw new IllegalStateException(
+          s"lineage manifest at $manifestPath exists but is unreadable " +
+            "(corrupt or schema-drifted) — refusing to silently treat it as " +
+            "empty and re-run everything; delete the manifest to force a " +
+            "full re-run", e)
     }
   }
 
-  /** Load the lineage manifest: the newest snapshot, or a directory in
-    * the older partitioned layout. A MISSING manifest is the normal
-    * first-run state and yields an empty frame, as does a directory
-    * holding only the staging directory of a first publish that crashed
-    * before its rename. A manifest that EXISTS but cannot be
-    * read/projected fails loudly instead of silently falling back to
-    * empty (which would quietly schedule a full re-run — at 100 TB an
-    * expensive surprise an operator must opt into by deleting the
-    * manifest; VERDICT r4 #4). The rows are read when this is called and
-    * returned as a local frame, so a later publish cannot change a frame
-    * a caller already holds. */
-  def readManifest(spark: SparkSession, manifestPath: String): DataFrame =
-    spark.createDataFrame(manifestRows(spark, manifestPath))
-
   /** Resume filter: the pages whose partition is not marked done with a
-    * matching fingerprint. Decided on the driver: the `done` manifest rows
-    * and the page fingerprints are both bounded by [[Buckets]], so they
-    * are collected — this runs the fingerprint job when CALLED, not when
-    * the result is used — and the pages are filtered by the pending keys.
-    * The returned plan reads only `pages`, never the manifest. */
-  def pendingPages(pages: DataFrame, manifest: DataFrame): DataFrame = {
-    val done = Bounded.collect(manifest.filter(col("status") === "done")
-        .select(col("partition_key"), col("input_fingerprint")), Buckets, "lineage manifest rows")
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    * matching fingerprint. Decided on the driver: `manifest` is the rows
+    * of [[readManifest]] and the page fingerprints are collected (bounded
+    * by [[Buckets]]) — this runs the fingerprint job when CALLED, not
+    * when the result is used — and the pages are filtered by the pending
+    * keys. The returned plan reads only `pages`, never the manifest. */
+  def pendingPages(pages: DataFrame, manifest: Seq[LineageRow]): DataFrame = {
+    val done = manifest.collect { case r if r.status == "done" => r.partition_key -> r.input_fingerprint }.toMap
     val keyed = pages.withColumn("partition_key", partitionKeyCol)
     val pendingKeys = fingerprints(keyed, "page fingerprints")
       .collect { case (k, fp) if !done.get(k).contains(fp) => k }
@@ -234,7 +241,7 @@ object Lineage {
     if (runKeys.nonEmpty) {
       val now = new Timestamp(System.currentTimeMillis())
       val run = runKeys.toSet
-      val kept = manifestRows(spark, manifestPath).filterNot(r => run(r.partition_key))
+      val kept = readManifest(spark, manifestPath).filterNot(r => run(r.partition_key))
       publish(spark, manifestPath, kept ++ fps.map { case (k, fp) =>
         LineageRow(k, fp, written.getOrElse(k, 0L), "done", now) })
     }

@@ -6,28 +6,33 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.pipeline._
 
-/** Structured Streaming skin over the batch KG spine (SURVEY.md §2.4
-  * "Streaming": the north rule requires RESUMABILITY, which the batch
-  * lineage manifest provides; this skin adds continuous/backlog ingestion
-  * with the same per-document core and the same idempotence guarantees).
+/** Structured Streaming skin over the batch KG spine: the same
+  * per-document emit loop (TripleEmit.emitKeyed) and the same
+  * `keyedTriples`/`keyedQuarantine` rows as `graft.KgRun`, over a pages
+  * directory that keeps growing.
   *
-  * Design: `readStream` over a pages directory → the identical fused
-  * extract→expand→toRDF flatMap (TripleEmit.emitKeyed — one narrow stage,
-  * no per-batch recompute) → `foreachBatch` sink writing each micro-batch
-  * under a batchId-scoped directory. Exactly-once across restarts needs
-  * BOTH halves: the checkpointed file-source offsets guarantee a page
-  * file is never part of two committed batches, and the batchId-scoped
-  * OVERWRITE makes the sink write idempotent — a batch replayed after a
-  * crash-between-write-and-commit rewrites the same `batch=<id>` directory
-  * with identical content instead of appending duplicates (a plain append
-  * here would be at-least-once; ADVICE.md round 2). `Trigger.AvailableNow`
-  * drains the backlog and stops, which is the streaming equivalent of the
-  * resumable batch run.
+  * How its output relates to KgRun's. KgRun resumes a corpus snapshot:
+  * its tables are partitioned by host bucket, a lineage manifest records
+  * each bucket's input fingerprint and triple count, a re-run replaces
+  * the changed buckets, and it builds an adjacency table. This stream
+  * instead APPENDS: each micro-batch writes its own directories,
+  * `triples/batch=<id>/partition_key=<bucket>/` and the same under
+  * `quarantine/`, with no manifest, no dedup across batches (a triple
+  * seen in two batches is stored twice) and no adjacency. `graft.KgCompact` is the
+  * downstream dedup of such a table. The stream cannot feed KgRun's
+  * manifest: Lineage treats its pages as the whole corpus, so a
+  * micro-batch would overwrite a bucket with partial data.
   *
-  * At 100 TB the same topology holds: the file source lists incrementally
-  * (`maxFilesPerTrigger` bounds batch size → bounded executor memory),
-  * the flatMap is embarrassingly parallel, and the only shuffle per batch
-  * is the per-partition dedup inside foreachBatch.
+  * Exactly-once across restarts needs both halves: the checkpointed
+  * file-source offsets guarantee a page file is never part of two
+  * committed batches, and the batchId-scoped OVERWRITE makes the sink
+  * write idempotent — a batch replayed after a crash between write and
+  * commit rewrites the same `batch=<id>` directory with identical
+  * content instead of appending duplicates (a plain append here would be
+  * at-least-once; ADVICE.md round 2). `Trigger.AvailableNow` drains the
+  * backlog and stops. The file source lists incrementally and
+  * `maxFilesPerTrigger` bounds a batch, so executor memory stays bounded
+  * at any input size.
   */
 object KgStream {
 
@@ -90,15 +95,4 @@ object KgStream {
       .withWatermark("warc_ts", delay)
       .groupBy(window(col("warc_ts"), windowLen), col("partition_key"))
       .agg(count(lit(1)).as("pages"))
-
-  /** Windowed ingest metrics (SURVEY.md §2.4 window row, streaming form):
-    * triples-per-host-bucket per processing-time window with a watermark —
-    * the live-dashboard companion of the per-partition lineage counts. */
-  def metrics(emitted: DataFrame): DataFrame =
-    emitted
-      .withColumn("event_time", current_timestamp())
-      .withWatermark("event_time", "1 minute")
-      .groupBy(window(col("event_time"), "30 seconds"), col("partition_key"))
-      .agg(sum(when(col("kind") === 0, 1).otherwise(0)).as("triples"),
-        sum(when(col("kind") === 1, 1).otherwise(0)).as("quarantined"))
 }

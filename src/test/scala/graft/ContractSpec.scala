@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - every plan-audited name is a real query;
   *  - names follow the q_* convention the bench/correctness tooling
   *    sorts and reports on;
-  *  - sessions are built by the one factory, [[Sessions]]. */
+  *  - sessions are built by the one factory, [[Sessions]];
+  *  - every top-level type in `src/main` is reachable: referenced from
+  *    code, or a main. */
 class ContractSpec extends AnyFunSuite {
 
   test("queries and oracles are exactly 1:1") {
@@ -70,5 +72,96 @@ class ContractSpec extends AnyFunSuite {
     assert(builders.contains("graft/Sessions.scala"))
     assert((builders -- sessionBuilders).isEmpty,
       s"hand-rolled SparkSession.builder outside graft.Sessions: ${(builders -- sessionBuilders).toSeq.sorted}")
+  }
+
+  /** Top-level types that nothing in `src/main` references and that
+    * declare no main, each with the reason it stays. */
+  private val unreachableKept = Map(
+    "BucketedStore" -> "subject-bucketed table IO that incremental adjacency may adopt",
+    "DedupStream" -> "streaming product surface: callers start it with DedupStream.run",
+    "DocumentLoader" -> "json-ld.net's remote-document loader, for callers that wire a transport",
+    "JdkHttpTransport" -> "the network transport a deployment passes to DocumentLoader",
+    "KgStream" -> "streaming product surface: callers start it with KgStream.run")
+
+  /** Scala source with its comments blanked out. Newlines stay, so line
+    * starts stay; string and character literals stay too, so a `//` in a
+    * string starts no comment and a name in a string counts. */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    var depth = 0 // block comments nest in Scala
+    def copyUntil(end: Int): Unit = { out ++= src.substring(i, end); i = end }
+    while (i < src.length) {
+      if (depth > 0) {
+        if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+        else if (src.startsWith("*/", i)) { depth -= 1; i += 2 }
+        else { if (src(i) == '\n') out += '\n'; i += 1 }
+      } else if (src.startsWith("/*", i)) { depth = 1; i += 2 }
+      else if (src.startsWith("//", i)) { while (i < src.length && src(i) != '\n') i += 1 }
+      else if (src.startsWith("\"\"\"", i)) {
+        var end = src.indexOf("\"\"\"", i + 3)
+        end = if (end < 0) src.length else end + 3
+        while (end < src.length && src(end) == '"') end += 1
+        copyUntil(end)
+      } else if (src(i) == '"') {
+        var end = i + 1
+        while (end < src.length && src(end) != '"' && src(end) != '\n')
+          end += (if (src(end) == '\\') 2 else 1)
+        copyUntil(math.min(end + 1, src.length))
+      } else if (src(i) == '\'' && i + 2 < src.length && (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+        val end = src.indexOf('\'', i + 2)
+        copyUntil(if (end < 0) src.length else end + 1)
+      } else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  private val TopLevelDecl =
+    """(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(?:object|class|trait)\s+(\w+)""".r
+
+  /** The top-level types of `sources` (path -> text) that no code outside
+    * their own declaration names and that declare no `main`. A
+    * declaration runs from its first line to the next top-level one. */
+  private def unreachable(sources: Map[String, String]): Set[String] = {
+    val code = sources.map { case (p, text) => p -> stripComments(text) }
+    val decls = code.toSeq.flatMap { case (p, text) =>
+      val starts = TopLevelDecl.findAllMatchIn(text).toSeq
+      starts.zip(starts.drop(1).map(_.start) :+ text.length).map { case (m, end) => (m.group(1), p, m.start, end) }
+    }
+    decls.groupBy(_._1).filter { case (name, own) =>
+      def inOwn(p: String, at: Int) = own.exists { case (_, q, start, end) => q == p && start <= at && at < end }
+      val word = ("\\b" + name + "\\b").r
+      val referenced = code.exists { case (p, text) => word.findAllMatchIn(text).exists(m => !inOwn(p, m.start)) }
+      val hasMain = own.exists { case (_, p, start, end) => code(p).substring(start, end).contains("def main(") }
+      !referenced && !hasMain
+    }.keySet
+  }
+
+  test("every top-level type in src/main is referenced from code or declares a main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val st = Files.walk(root)
+    val sources =
+      try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
+      finally st.close()
+    val found = unreachable(sources)
+    assert((found -- unreachableKept.keySet).isEmpty,
+      s"unreferenced top-level types without a main: ${(found -- unreachableKept.keySet).toSeq.sorted}")
+    assert((unreachableKept.keySet -- found).isEmpty,
+      s"listed as unreachable but now referenced or gone: ${(unreachableKept.keySet -- found).toSeq.sorted}")
+  }
+
+  test("the reachability check sees through comments and strings") {
+    val stripped = stripComments("val u = \"http://x\" // A\n/* B /* C */ D */ val c = '\"'; E")
+    assert(stripped.contains("\"http://x\"") && stripped.contains("E"), stripped)
+    assert(!Seq("A", "B", "C", "D").exists(stripped.contains), stripped)
+    val found = unreachable(Map(
+      "a.scala" -> "object A { def main(args: Array[String]): Unit = B.f }\n",
+      "b.scala" -> "object B { def f = 1 }\n// C is named only here\nclass C { val c = new C }\n",
+      "d.scala" -> "case class D(x: Int)\nobject D { def apply(): D = D(0) }\nobject E { val d = D(1) }\n"))
+    assert(found == Set("C", "E"), found)
   }
 }

@@ -37,7 +37,7 @@ class KgRunSpec extends AnyFunSuite {
     assert(first("triples_total") == JLong(written.count()))
     // manifest triple counts equal the written partition counts
     val manifest = Lineage.readManifest(spark, s"$out/lineage")
-    val mTotal = manifest.agg(sum(col("triple_count"))).collect()(0).getLong(0)
+    val mTotal = manifest.map(_.triple_count).sum
     assert(mTotal == written.count())
 
     // second run: nothing pending
@@ -52,6 +52,11 @@ class KgRunSpec extends AnyFunSuite {
     val changedKeys = pending3.select(col("partition_key")).distinct().count()
     assert(pending3.count() > 0 && changedKeys == 1,
       s"one new page must re-open exactly one partition, got $changedKeys")
+
+    // the resume's total, taken from the manifest, is the table's row count
+    val resumed = report(KgRun.run(spark, PageGen.pages(spark, nPages + 1, 42L, 8), out))
+    assert(resumed("status") == JStr("done") && resumed("pending") != JLong(0))
+    assert(resumed("triples_total") == JLong(spark.read.parquet(s"$out/triples").count()))
 
     // adjacency the job wrote over the written table
     val adj = spark.read.parquet(s"$out/adjacency")
@@ -82,7 +87,7 @@ class KgRunSpec extends AnyFunSuite {
     val data = spark.read.parquet(s"$out/triples")
     assert(data.count() == 1, "stale hbB rows must be deleted")
     val m = Lineage.readManifest(spark, s"$out/lineage")
-      .select("partition_key", "triple_count").as[(String, Long)].collect().toMap
+      .map(r => r.partition_key -> r.triple_count).toMap
     assert(m("hbA") == 1L && m("hbB") == 0L, s"manifest must match data: $m")
   }
 

@@ -35,7 +35,7 @@ class LineageManifestSpec extends AnyFunSuite {
   }
 
   private def manifest(dir: String): Set[LineageRow] =
-    Lineage.readManifest(spark, s"$dir/lineage").as[LineageRow].collect().toSet
+    Lineage.readManifest(spark, s"$dir/lineage").toSet
 
   private def pendingKeys(dir: String, us: Seq[String]): Set[String] =
     Lineage.pendingPages(pages(us), Lineage.readManifest(spark, s"$dir/lineage"))
@@ -166,9 +166,34 @@ class LineageManifestSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ten ids") && e.getMessage.contains("9"), e.getMessage)
     // the manifest collect is bounded by the bucket count
     val now = new Timestamp(0L)
-    val tooMany = (0 to Lineage.Buckets).map(i => LineageRow(s"hb$i", 0L, 0L, "done", now)).toDF()
-    val e2 = intercept[IllegalStateException](Lineage.pendingPages(pages(urls(3)), tooMany))
-    assert(e2.getMessage.contains("lineage manifest rows"), e2.getMessage)
+    val tooMany = (0 to Lineage.Buckets).map(i => LineageRow(s"hb$i", 0L, 0L, "done", now))
+    val dir = tmp("lineage-too-many")
+    Lineage.publish(spark, s"$dir/lineage", tooMany)
+    val e2 = intercept[IllegalStateException](Lineage.readManifest(spark, s"$dir/lineage"))
+    val messages = Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(messages.exists(m => m.contains("lineage manifest rows") && m.contains(s"bounded at ${Lineage.Buckets}")),
+      messages.mkString(" / "))
+  }
+
+  /** `df` written as the only snapshot file of `<dir>/lineage`. */
+  private def writeSnapshot(df: DataFrame, dir: String): String = {
+    df.coalesce(1).write.parquet(s"$dir/staged")
+    val st = Files.list(Paths.get(dir, "staged"))
+    val part = try st.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get finally st.close()
+    Files.createDirectories(Paths.get(dir, "lineage"))
+    Files.move(part, Paths.get(dir, "lineage", "snapshot-00000000000000000001.parquet"))
+    s"$dir/lineage"
+  }
+
+  test("a schema-drifted snapshot fails loudly") {
+    val rows = Seq(LineageRow("hb1", 1L, 2L, "done", new Timestamp(0L))).toDF()
+    assert(Lineage.readManifest(spark, writeSnapshot(rows, tmp("lineage-drift-ok"))).size == 1)
+    Seq("no triple_count" -> rows.drop("triple_count"), "no status" -> rows.drop("status"),
+      "string input_fingerprint" -> rows.withColumn("input_fingerprint", col("input_fingerprint").cast("string"))
+    ).foreach { case (drift, df) =>
+      val e = intercept[IllegalStateException](Lineage.readManifest(spark, writeSnapshot(df, tmp("lineage-drift"))))
+      assert(e.getMessage.contains("unreadable"), s"$drift: ${e.getMessage}")
+    }
   }
 
   /** Descriptions of the jobs `body` starts. A marker job flushes the
@@ -207,7 +232,17 @@ class LineageManifestSpec extends AnyFunSuite {
     assert(!jobs.exists(listing), s"listing jobs: ${jobs.filter(listing)}")
     // the detector sees the listing job the partitioned layout starts
     val legacy = s"$dir/legacy"
-    Lineage.readManifest(spark, s"$dir/lineage").write.partitionBy("partition_key").parquet(legacy)
+    Lineage.readManifest(spark, s"$dir/lineage").toDF().write.partitionBy("partition_key").parquet(legacy)
     assert(jobDescriptions(Lineage.readManifest(spark, legacy)).exists(listing))
+  }
+
+  test("reading a 64-bucket snapshot is one job") {
+    val dir = tmp("lineage-one-job")
+    run(dir, urls(1000))
+    var rows = Seq.empty[LineageRow]
+    val jobs = jobDescriptions { rows = Lineage.readManifest(spark, s"$dir/lineage") }
+    assert(rows.size == Lineage.Buckets)
+    assert(jobs.size == 1, s"jobs: $jobs")
+    assert(!jobs.exists(_.startsWith("Listing leaf files and directories")), s"jobs: $jobs")
   }
 }
