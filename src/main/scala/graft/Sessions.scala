@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one Spark-session factory for graft's mains and test suites: the
   * session policy (`local[cores]`, shuffle parallelism = cores, UTC, no
-  * UI, WARN logging) is written here once. A caller that needs a
+  * UI, WARN logging, a generated-class cache that holds a whole query
+  * mix) is written here once. A caller that needs a
   * different SQL setting sets it on the returned session with
   * `spark.conf.set`. `Bench` and `Verify` keep their own builders: the
   * measurement harness is frozen byte for byte.
@@ -19,6 +20,12 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Spark keeps 100 generated classes per JVM, keyed by class loader
+      // as well as code, so a class compiled on a driver thread and on an
+      // executor thread takes two entries. Three text queries already hold
+      // ~150 keys, so each pass recompiled its classes. A static setting:
+      // it holds only if this is the JVM's first session.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -795,31 +795,30 @@ final class JsonLdApi(val opts: JsonLdOptions) {
   // Normalization entry (Core/JsonLdApi.cs:2197-2249)
   // ------------------------------------------------------------------
 
+  /** Canonical blank-node labels for `dataset` ([[NormalizeUtils]] relabels
+    * its quads in place), then the one place that formats them: with
+    * `format` application/nquads, Left of the sorted N-Quads text
+    * ([[NQuads.toNQuads]]); with no format, Right of the relabelled quads
+    * as [[NQuads.parseNQuads]] would read that text back
+    * ([[NQuads.asParsed]]: duplicates dropped, a term the parser refuses
+    * raised as its error); any other format is `UnknownFormat`. */
   def normalize(dataset: RdfDataset): Either[String, RdfDataset] = {
     val quads = new ArrayBuffer[RdfQuad]
     val bnodes = mutable.LinkedHashMap.empty[String, NormalizeUtils.BnodeEntry]
-    dataset.graphNames.foreach { graphName0 =>
-      var graphName = graphName0
-      val triples = dataset.getQuads(graphName0)
-      if ("@default" == graphName) graphName = null
-      triples.foreach { quad =>
-        if (graphName != null) {
-          if (graphName.startsWith("_:")) quad.name = Some(new RdfBlank(graphName))
-          else quad.name = Some(new RdfIri(graphName))
-        }
+    dataset.graphNames.foreach { graphName =>
+      dataset.getQuads(graphName).foreach { quad =>
+        if ("@default" != graphName) quad.name = RdfQuad.graphNode(graphName)
         quads += quad
-        val attrs: Seq[RdfNode] = Seq(quad.subject, quad.obj) ++ quad.name.toSeq
-        attrs.foreach { node =>
-          if (node.isBlankNode) {
-            val id = node.value
-            val entry = bnodes.getOrElseUpdate(id, new NormalizeUtils.BnodeEntry)
-            entry.quads += quad
-          }
+        (Seq(quad.subject, quad.obj) ++ quad.name).foreach { node =>
+          if (node.isBlankNode) bnodes.getOrElseUpdate(node.value, new NormalizeUtils.BnodeEntry).quads += quad
         }
       }
     }
-    val normalizeUtils = new NormalizeUtils(quads, bnodes, new UniqueNamer("_:c14n"), opts)
-    normalizeUtils.hashBlankNodes(bnodes.keys.toVector)
+    val relabelled = new NormalizeUtils(quads, bnodes, new UniqueNamer("_:c14n"), opts)
+      .hashBlankNodes(bnodes.keys.toVector)
+    if (opts.format == null) Right(NQuads.asParsed(relabelled))
+    else if ("application/nquads" == opts.format) Left(NQuads.toNQuads(relabelled))
+    else throw new JsonLdError(JsonLdError.UnknownFormat, opts.format)
   }
 
   // ------------------------------------------------------------------

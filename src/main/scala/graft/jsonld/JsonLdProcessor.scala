@@ -163,8 +163,6 @@ object JsonLdProcessor {
   def registerRdfParser(format: String, parser: String => RdfDataset): Unit =
     rdfParsers.put(format, parser)
 
-  def removeRdfParser(format: String): Unit = rdfParsers.remove(format)
-
   /** Core/JsonLdProcessor.cs:326-395. */
   def fromRDF(dataset: JV, options: JsonLdOptions): JV = {
     if (options.format == null && dataset.isInstanceOf[JStr])

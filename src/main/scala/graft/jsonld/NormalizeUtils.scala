@@ -34,7 +34,9 @@ final class UniqueNamer(val prefix: String) {
   * Produces `_:c14n<N>` names; SHA-1 based; `_:a`/`_:z`/`_:g` positional
   * placeholders; Steinhaus–Johnson–Trotter permutation search with the
   * lexicographically-least-path pruning. NOT spec-URDNA2015 — the golden
-  * normalize-*.nq files encode THIS algorithm (SURVEY.md §7.4.3). */
+  * normalize-*.nq files encode THIS algorithm (SURVEY.md §7.4.3).
+  * It relabels the quads and hands them back; it writes no text (the
+  * per-bnode hashes serialize single quads with placeholders). */
 final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
                            bnodes: mutable.LinkedHashMap[String, NormalizeUtils.BnodeEntry],
                            namer: UniqueNamer,
@@ -56,10 +58,11 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
         s"$budget permutation steps")
   }
 
-  /** Fixpoint hashing + duplicate-group path hashing, then rename, sort
-    * lines, concat (Core/NormalizeUtils.cs:30-205). Returns Left(nquads)
-    * when options.format == application/nquads, else Right(re-parsed). */
-  def hashBlankNodes(unnamed0: Vector[String]): Either[String, RdfDataset] = {
+  /** Fixpoint hashing + duplicate-group path hashing, then every blank
+    * node renamed in place (Core/NormalizeUtils.cs:30-205). Returns the
+    * relabelled quads, grouped by each quad's relabelled graph name and in
+    * input order; writing them out is [[JsonLdApi.normalize]]'s job. */
+  def hashBlankNodes(unnamed0: Vector[String]): RdfDataset = {
     var unnamed: ArrayBuffer[String] = ArrayBuffer.from(unnamed0)
     var nextUnnamed = new ArrayBuffer[String]
     var duplicates = mutable.LinkedHashMap.empty[String, ArrayBuffer[String]]
@@ -83,12 +86,8 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
         } else unique.put(hash, bnode)
       }
       // name unique-hash bnodes in sorted hash order
-      var named = false
-      unique.keys.toVector.sorted.foreach { hash =>
-        namer.getName(unique(hash))
-        named = true
-      }
-      if (named) {
+      unique.keys.toVector.sorted.foreach(hash => namer.getName(unique(hash)))
+      if (unique.nonEmpty) {
         unnamed = nextUnnamed
         nextUnnamed = new ArrayBuffer[String]
         duplicates = mutable.LinkedHashMap.empty
@@ -105,30 +104,19 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
               results += hashPaths(bnode, pathNamer)
             }
           }
-          val sortedResults = results.sortBy(_.hash)
-          sortedResults.foreach { r =>
-            r.pathNamer.existingKeys.foreach(key => namer.getName(key))
-          }
+          results.sortBy(_.hash).foreach(_.pathNamer.existingKeys.foreach(namer.getName))
         }
-        // all named: update bnode names in each quad and serialize
-        val normalized = new ArrayBuffer[String]
+        // all named: update bnode names in each quad
+        val relabelled = new RdfDataset
         quads.foreach { quad =>
           val attrs: Seq[RdfNode] = Seq(quad.subject, quad.obj) ++ quad.name.toSeq
           attrs.foreach { qa =>
             if (qa.isBlankNode && !qa.value.startsWith("_:c14n"))
               qa.value = namer.getName(qa.value)
           }
-          normalized += NQuads.toNQuad(quad, quad.name.map(_.value).orNull)
+          relabelled.graphs.getOrElseUpdate(quad.name.fold("@default")(_.value), new ArrayBuffer[RdfQuad]) += quad
         }
-        val sorted = normalized.sorted
-        val sb = new java.lang.StringBuilder
-        sorted.foreach(sb.append)
-        val rval = sb.toString
-        if (options.format != null) {
-          if ("application/nquads" == options.format) return Left(rval)
-          else throw new JsonLdError(JsonLdError.UnknownFormat, options.format)
-        }
-        return Right(NQuads.parseNQuads(rval))
+        return relabelled
       }
     }
     throw new IllegalStateException("unreachable")
@@ -138,16 +126,9 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
     * (Core/NormalizeUtils.cs:466-488), memoized per bnode. */
   private def hashQuads(id: String): String = {
     val entry = bnodes(id)
-    if (entry.hash != null) return entry.hash
-    val nquads = entry.quads.map { quad =>
-      NQuads.toNQuad(quad, quad.name.map(_.value).orNull, id)
-    }
-    val sorted = nquads.sorted
-    val md = java.security.MessageDigest.getInstance("SHA-1")
-    sorted.foreach(n => md.update(n.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    val hash = encodeHex(md.digest())
-    entry.hash = hash
-    hash
+    if (entry.hash == null)
+      entry.hash = sha1Hex(entry.quads.map(q => NQuads.toNQuad(q, q.name.map(_.value).orNull, id)).sorted.toSeq: _*)
+    entry.hash
   }
 
   /** Path hashing over adjacent-bnode permutations, choosing the
@@ -172,12 +153,7 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
           if (namer.isNamed(bnode)) namer.getName(bnode)
           else if (pathNamer.isNamed(bnode)) pathNamer.getName(bnode)
           else hashQuads(bnode)
-        val md1 = java.security.MessageDigest.getInstance("SHA-1")
-        md1.update(direction.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md1.update(quad.predicate.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md1.update(name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val groupHash = encodeHex(md1.digest())
-        groups.getOrElseUpdate(groupHash, new ArrayBuffer[String]) += bnode
+        groups.getOrElseUpdate(sha1Hex(direction, quad.predicate.value, name), new ArrayBuffer[String]) += bnode
       }
     }
 
@@ -189,6 +165,12 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
       var chosenNamer: UniqueNamer = null
       val permutator = new Permutator(groups(groupHash).toVector)
       var breakOut = false
+      // the least path is final: hash it and keep its namer
+      def choose(): Unit = {
+        md.update(chosenPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        pathNamer = chosenNamer
+        breakOut = true
+      }
       while (!breakOut) {
         var contPermutation = false
         chargePermutation()
@@ -206,11 +188,7 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
             }
             if (chosenPath != null && path.length >= chosenPath.length && path.compareTo(chosenPath) > 0) {
               if (permutator.hasNext) contPermutation = true
-              else {
-                md.update(chosenPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                pathNamer = chosenNamer
-                breakOut = true
-              }
+              else choose()
               innerBreak = true
             }
           }
@@ -224,11 +202,7 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
                 chosenPath = path
                 chosenNamer = pathNamerCopy
               }
-              if (!permutator.hasNext) {
-                md.update(chosenPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                pathNamer = chosenNamer
-                breakOut = true
-              }
+              if (!permutator.hasNext) choose()
               recBreak = true
             } else {
               val bnode = recurse(nrn)
@@ -236,11 +210,7 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
               path += pathNamerCopy.getName(bnode) + "<" + result.hash + ">"
               pathNamerCopy = result.pathNamer
               if (chosenPath != null && path.length >= chosenPath.length && path.compareTo(chosenPath) > 0) {
-                if (!permutator.hasNext) {
-                  md.update(chosenPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-                  pathNamer = chosenNamer
-                  breakOut = true
-                }
+                if (!permutator.hasNext) choose()
                 recBreak = true
               }
               nrn += 1
@@ -249,10 +219,7 @@ final class NormalizeUtils(quads: ArrayBuffer[RdfQuad],
         }
       }
     }
-    val res = new HashResult
-    res.hash = encodeHex(md.digest())
-    res.pathNamer = pathNamer
-    res
+    HashResult(encodeHex(md.digest()), pathNamer)
   }
 
   private def getAdjacentBlankNodeName(node: RdfNode, id: String): String =
@@ -265,12 +232,15 @@ object NormalizeUtils {
     var hash: String = null
   }
 
-  final class HashResult {
-    var hash: String = null
-    var pathNamer: UniqueNamer = null
-  }
+  final case class HashResult(hash: String, pathNamer: UniqueNamer)
 
   private val HexDigits = "0123456789abcdef".toCharArray
+
+  def sha1Hex(parts: String*): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-1")
+    parts.foreach(p => md.update(p.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    encodeHex(md.digest())
+  }
 
   def encodeHex(data: Array[Byte]): String = {
     val out = new Array[Char](data.length * 2)

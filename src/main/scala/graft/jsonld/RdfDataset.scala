@@ -81,14 +81,12 @@ final class RdfLiteral(var value: String, dt: String, lang: String) extends RdfN
 
 object JsonLdConsts {
   val RdfSyntaxNs = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-  val RdfSchemaNs = "http://www.w3.org/2000/01/rdf-schema#"
   val XsdNs = "http://www.w3.org/2001/XMLSchema#"
   val XsdBoolean = XsdNs + "boolean"
   val XsdDouble = XsdNs + "double"
   val XsdInteger = XsdNs + "integer"
   val XsdFloat = XsdNs + "float"
   val XsdDecimal = XsdNs + "decimal"
-  val XsdAnyuri = XsdNs + "anyURI"
   val XsdString = XsdNs + "string"
   val RdfType = RdfSyntaxNs + "type"
   val RdfFirst = RdfSyntaxNs + "first"
@@ -122,11 +120,14 @@ final class RdfQuad(var subject: RdfNode, var predicate: RdfNode, var obj: RdfNo
 object RdfQuad {
   def apply(subject: String, predicate: String, obj: RdfNode, graph: String): RdfQuad = {
     val s: RdfNode = if (subject.startsWith("_:")) new RdfBlank(subject) else new RdfIri(subject)
-    val g = if (graph != null && graph != "@default")
-      Some(if (graph.startsWith("_:")) new RdfBlank(graph): RdfNode else new RdfIri(graph): RdfNode)
-    else None
-    new RdfQuad(s, new RdfIri(predicate), obj, g)
+    new RdfQuad(s, new RdfIri(predicate), obj, graphNode(graph))
   }
+
+  /** A quad's graph term for a dataset graph name: None for the default
+    * graph, a blank node for a `_:` name, else an IRI. */
+  def graphNode(graph: String): Option[RdfNode] =
+    if (graph == null || graph == "@default") None
+    else Some(if (graph.startsWith("_:")) new RdfBlank(graph) else new RdfIri(graph))
 }
 
 /** Named-graph quad store (Core/RDFDataset.cs:22). Insertion-ordered with
@@ -140,8 +141,6 @@ final class RdfDataset {
   private val context = mutable.LinkedHashMap.empty[String, String]
 
   def setNamespace(ns: String, iri: String): Unit = context.put(ns, iri)
-  def getNamespace(ns: String): String = context.getOrElse(ns, null)
-  def clearNamespaces(): Unit = context.clear()
   def getNamespaces: mutable.LinkedHashMap[String, String] = context
 
   /** Harvest namespaces from a JSON-LD @context object
@@ -228,25 +227,25 @@ final class RdfDataset {
                   last = objectToRDF(list(list.size - 1))
                   firstBNode = new RdfBlank(api.generateBlankNodeIdentifier())
                 }
-                triples += new RdfQuad(subject, predicate, firstBNode, graphNodeOpt(graphName))
+                triples += new RdfQuad(subject, predicate, firstBNode, RdfQuad.graphNode(graphName))
                 var i = 0
                 var cur = firstBNode
                 while (i < list.size - 1) {
                   val obj = objectToRDF(list(i))
-                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfFirst), obj, graphNodeOpt(graphName))
+                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfFirst), obj, RdfQuad.graphNode(graphName))
                   val restBNode = new RdfBlank(api.generateBlankNodeIdentifier())
-                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfRest), restBNode, graphNodeOpt(graphName))
+                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfRest), restBNode, RdfQuad.graphNode(graphName))
                   cur = restBNode
                   i += 1
                 }
                 if (last != null) {
-                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfFirst), last, graphNodeOpt(graphName))
-                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfRest), new RdfIri(JsonLdConsts.RdfNil), graphNodeOpt(graphName))
+                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfFirst), last, RdfQuad.graphNode(graphName))
+                  triples += new RdfQuad(cur, new RdfIri(JsonLdConsts.RdfRest), new RdfIri(JsonLdConsts.RdfNil), RdfQuad.graphNode(graphName))
                 }
               } else {
                 val obj = objectToRDF(item)
                 if (obj != null)
-                  triples += new RdfQuad(subject, predicate, obj, graphNodeOpt(graphName))
+                  triples += new RdfQuad(subject, predicate, obj, RdfQuad.graphNode(graphName))
               }
             }
           }
@@ -255,11 +254,6 @@ final class RdfDataset {
     }
     graphs(graphName) = triples
   }
-
-  private def graphNodeOpt(graphName: String): Option[RdfNode] =
-    if (graphName != null && graphName != "@default")
-      Some(if (graphName.startsWith("_:")) new RdfBlank(graphName) else new RdfIri(graphName))
-    else None
 
   /** JSON-LD value/node object -> RDF term (Core/RDFDataset.cs:724-803). */
   def objectToRDF(item: JV): RdfNode = {

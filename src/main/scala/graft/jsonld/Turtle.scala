@@ -125,7 +125,6 @@ object Turtle {
     val Predicate: Pattern = Pattern.compile("^" + Iri + "|a" + Ws1N)
     val ObjectP: Pattern = Pattern.compile("^" + Iri + "|" + BlankNode + "|" + Literal)
     val Eoln = "(?:\r\n)|(?:\n)|(?:\r)"
-    val NextEoln: Pattern = Pattern.compile("^.*(?:" + Eoln + ")" + Ws0N)
     val CommentOrWs: Pattern =
       Pattern.compile("^(?:(?:[#].*(?:" + Eoln + ")" + Ws0N + ")|(?:" + Ws1N + "))")
     val IrirefMinusContainer: Pattern =

@@ -70,4 +70,26 @@ class NQuadsSyntaxSpec extends AnyFunSuite {
       assert(ser1 == ser2, s"${p.getFileName} not stable under round-trip")
     }
   }
+
+  test("duplicate quads are dropped per graph, first occurrences kept in line order") {
+    val lines = Vector(
+      """<http://a/s> <http://a/p> "x" .""",
+      """<http://a/s> <http://a/p> "x" <http://a/g> .""",
+      """_:b0 <http://a/p> <http://a/o> .""",
+      """<http://a/s> <http://a/p> "x" .""",
+      """<http://a/s> <http://a/p> "x"@en .""",
+      """<http://a/s> <http://a/p> "x"^^<http://a/dt> .""",
+      """_:b0 <http://a/p> <http://a/o> .""",
+      """_:b0 <http://a/p> <http://a/o> _:g .""",
+      """<http://a/s> <http://a/p> "x" <http://a/g> .""",
+      """<http://a/s> <http://a/p> "x"@en .""",
+      """_:b0 <http://a/p> <http://a/o> _:g .""")
+    val ds = NQuads.parseNQuads(lines.mkString("\n"))
+    def written(g: String) =
+      ds.getQuads(g).map(q => NQuads.toNQuad(q, if (g == "@default") null else g).trim).toVector
+    assert(ds.graphNames == Vector("@default", "http://a/g", "_:g"))
+    assert(written("@default") == Vector(lines(0), lines(2), lines(4), lines(5)))
+    assert(written("http://a/g") == Vector(lines(1)))
+    assert(written("_:g") == Vector(lines(7)))
+  }
 }

@@ -6,14 +6,34 @@ graft.Verify parquet dump against its DuckDB oracle — row count, schema
 Usage: python3 tools/selfcheck.py <verify_out_dir> <sf_dir> [out_json]
 
 The verify dir must contain oracle_sql.json (with {AUX} already resolved
-by graft.Verify) and one parquet dir per query.
+by graft.Verify) and one parquet dir per query. Each oracle runs with its
+CTEs materialized (see `materialized`).
 """
 import json
 import os
+import re
 import sys
 import time
 
 import duckdb
+
+# A CTE head, `name AS (` or `name(col, ...) AS (`, or a named window
+# (`WINDOW w AS (`), which is left as it is.
+CTE_HEAD = re.compile(r"(\bWINDOW\s+)?(\b\w+(?:\s*\([^()]*\))?)\s+AS\s*\(", re.IGNORECASE)
+
+
+def materialized(sql):
+    """`sql` with every CTE computed once (`name AS MATERIALIZED (`).
+
+    DuckDB 1.0 inlines a CTE at each reference, so an unrolled chain whose
+    step reads the previous step four times (q_kg_kcore's six k-core
+    rounds) holds 4^6 copies of its first round and spilled ~18 GB at
+    sf0.001.
+    Materializing changes no row of the result; the oracle text itself
+    (SparkEntry.oracleSql) stays as written.
+    """
+    return CTE_HEAD.sub(
+        lambda m: m.group(0) if m.group(1) else m.group(2) + " AS MATERIALIZED (", sql)
 
 
 def main():
@@ -44,7 +64,7 @@ def main():
             got = con.execute(
                 f"SELECT * FROM read_parquet('{spark_dir}/*.parquet')"
             ).fetch_arrow_table()
-            want = con.execute(oracles[name]).fetch_arrow_table()
+            want = con.execute(materialized(oracles[name])).fetch_arrow_table()
             g_cols = sorted(got.column_names)
             w_cols = sorted(want.column_names)
             if g_cols != w_cols:
