@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import java.nio.file.{Files, Paths}
 import graft.ops.{DedupOps, MultimodalOps, VectorOps}
 import graft.pipeline.{GraphMaterialize, PageGen, TripleEmit}
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Deterministic auxiliary tables that make the non-SQL-producible
   * operators DuckDB-checkable (round-2 verdict #1: 7 of 26 driver queries
@@ -122,7 +123,7 @@ object AuxTables {
     //    — ONE sketch pass feeds both artifacts (checkpointed: the pair
     //    generator references its input from several plan branches)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val sk = DedupOps.sketches(docs).localCheckpoint(true)
+    val sk = Leaf(DedupOps.sketches(docs), eager = true)
     sk.select("doc_id", "simhash")
       .coalesce(1).write.mode("overwrite").parquet(s"$d/simhash_sigs")
     DedupOps.minhashNearDupsFromSketches(

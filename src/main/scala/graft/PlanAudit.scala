@@ -15,9 +15,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * to `<outDir>/<query>_<suffix>.txt` — the optimization-round evidence
   * artifact (`plans/r06/<query>_{before,after}.txt`) — and the queries
   * are every SparkEntry query in name order rather than [[audited]].
-  * Several operators are eager by contract (they localCheckpoint during
-  * DataFrame construction), so their plan is the post-checkpoint
-  * consumer plan.
+  * Several operators cut their plan with `graftshim.Leaf` during
+  * DataFrame construction (an eager leaf runs its job right there), so
+  * their plan is the consumer plan over that leaf's `LogicalRDD`.
   */
 object PlanAudit {
   /** Audited query names — a val on the object (not a local) so

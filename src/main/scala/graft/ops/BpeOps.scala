@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Distributed byte-pair-encoding merge training (Sennrich et al. 2016,
   * "Neural Machine Translation of Rare Words with Subword Units") — the
@@ -82,15 +83,13 @@ object BpeOps {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = documents.sparkSession
     import spark.implicits._
-    val wf = documents
+    // lazy: the count below fills the blocks; the collect (or the
+    // fallback's merge loop) re-reads them — ONE wordcount either way.
+    // The blocks live while any frame built on `wf` is referenced and
+    // the ContextCleaner frees them after that.
+    val wf = Leaf(documents
       .select(explode(CurationOps.wsTokens(lower(col("text")))).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      // lazy: the count below materializes the blocks; the collect (or
-      // the fallback's merge loop) re-reads them — ONE wordcount either
-      // way. Checkpoint blocks are reclaimed by the ContextCleaner once
-      // the frame is unreferenced (Dataset.unpersist would be a no-op on
-      // RDD-level checkpoint storage).
-      .localCheckpoint(false)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq")), eager = false)
     val nVocab = wf.count()
     if (nVocab > maxDriverVocab)
       return trainMergesDistributed(wf, numMerges)
@@ -208,9 +207,8 @@ object BpeOps {
   private def trainMergesDistributed(wf: DataFrame, numMerges: Int): DataFrame = {
     val spark = wf.sparkSession
     import spark.implicits._
-    var vocab = wf
-      .select(col("freq"), regexp_replace(col("word"), "(.)", " $1 ").as("sym"))
-      .localCheckpoint(true)
+    var vocab = Leaf(wf
+      .select(col("freq"), regexp_replace(col("word"), "(.)", " $1 ").as("sym")), eager = true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var rank = 1
     var exhausted = false
@@ -233,16 +231,12 @@ object BpeOps {
       else {
         val (w1, w2, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((rank, w1, w2, cnt))
-        val prev = vocab
-        vocab = vocab
+        vocab = Leaf(vocab
           .withColumn("sym", org.apache.spark.sql.functions.replace(
-            col("sym"), lit(s" $w1  $w2 "), lit(s" $w1$w2 ")))
-          .localCheckpoint(true)
-        prev.unpersist()
+            col("sym"), lit(s" $w1  $w2 "), lit(s" $w1$w2 "))), eager = true)
         rank += 1
       }
     }
-    vocab.unpersist()
     merges.toSeq.toDF("rank", "w1", "w2", "pair_n")
       .select(col("rank"), col("w1"), col("w2"),
         concat(col("w1"), col("w2")).as("merged"), col("pair_n"))

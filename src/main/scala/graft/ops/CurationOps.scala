@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Corpus-curation operators below document granularity: exact
   * line/paragraph-level deduplication (CCNet/RefinedWeb-style — the
@@ -903,13 +904,12 @@ object CurationOps {
       .select(explode(col("w")).as("tok"))
       .select(lineKey(col("tok")): _*)
       .groupBy("h1", "h2").agg(count(lit(1)).as("t_f"))
-    val dict = rawCnt.join(tgtCnt, Seq("h1", "h2"), "full_outer")
+    // lazy: the scalar-totals collect below fills the blocks, the probe
+    // join then reads them (one job, not two — optimization r6)
+    val dict = Leaf(rawCnt.join(tgtCnt, Seq("h1", "h2"), "full_outer")
       .select(col("h1"), col("h2"),
         coalesce(col("r_f"), lit(0L)).as("r_f"),
-        coalesce(col("t_f"), lit(0L)).as("t_f"))
-      // lazy: the scalar-totals collect below materializes the blocks,
-      // the probe join then reads them (one job, not two — optimization r6)
-      .localCheckpoint(false)
+        coalesce(col("t_f"), lit(0L)).as("t_f")), eager = false)
     val Array(totR, totT, totV) = {
       val row = dict.agg(sum(col("r_f")), sum(col("t_f")), count(lit(1))).first()
       Array(row.getLong(0), row.getLong(1), row.getLong(2))
@@ -993,14 +993,13 @@ object CurationOps {
     require(nPos > 0 && nNeg > 0,
       s"quality classifier seed samples must be non-empty (positives=$nPos, negatives=$nNeg)")
     val prior1024 = lgL(nPos) - lgL(nNeg)
-    val dict = classCnt(positives, "p_f")
+    // lazy: the totals collect below fills the blocks, the probe join
+    // then reads them (one job, not two — optimization r6)
+    val dict = Leaf(classCnt(positives, "p_f")
       .join(classCnt(negatives, "n_f"), Seq("h1", "h2"), "full_outer")
       .select(col("h1"), col("h2"),
         coalesce(col("p_f"), lit(0L)).as("p_f"),
-        coalesce(col("n_f"), lit(0L)).as("n_f"))
-      // lazy: the totals collect below materializes the blocks, the
-      // probe join then reads them (one job, not two — optimization r6)
-      .localCheckpoint(false)
+        coalesce(col("n_f"), lit(0L)).as("n_f")), eager = false)
     val Array(totP, totN, totV) = {
       val row = dict.agg(sum(col("p_f")), sum(col("n_f")), count(lit(1))).first()
       // seeds can be non-empty yet tokenless (all-whitespace texts):
@@ -1170,18 +1169,16 @@ object CurationOps {
         s"${lg1024Sql(s"coalesce(c1cnt, 0L) + ${totV}L")} - ${lg1024Sql("coalesce(c2cnt, 0L) + 1L")}"))
     val sc = terms.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("t")).as("nll"))
-    val scored = documents.select(col("doc_id").cast("long").as("doc_id"))
+    // lazy: the tercile-threshold collect below fills every partition
+    // (the filter sits downstream of the leaf), the bucketing branch then
+    // reads the blocks (one job, not two — optimization r6)
+    val scored = Leaf(documents.select(col("doc_id").cast("long").as("doc_id"))
       .join(sc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(col("nll"), lit(0L)).as("nll"))
       .withColumn("ppl1024",
-        when(col("n_bigrams") >= 1, expr("nll div n_bigrams")).otherwise(lit(0L)))
-      // lazy: the tercile-threshold collect below materializes every
-      // partition (the filter sits downstream of the checkpoint), the
-      // bucketing branch then reads the blocks (one job, not two —
-      // optimization r6)
-      .localCheckpoint(false)
+        when(col("n_bigrams") >= 1, expr("nll div n_bigrams")).otherwise(lit(0L))), eager = false)
     val thresholds = exactQuantiles(
       scored.filter(col("n_bigrams") >= 1).withColumn("g", lit(1)),
       "g", "ppl1024", Seq(33, 67))

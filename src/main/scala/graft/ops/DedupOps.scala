@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Deduplication operators for web-scale corpora. Design points for
   * 100 TB: signatures are computed in ONE narrow typed pass per document
@@ -91,15 +92,12 @@ object DedupOps {
     * tokenize+minhash pass over the documents. Checkpointing the COMPACT
     * per-doc sketch frame (one ~0.5 KB row per document, not the ×bands
     * explode) bounds that to exactly one pass; the explode re-runs per
-    * branch but is a trivial narrow op over checkpointed rows. Blocks
-    * are reclaimed by the ContextCleaner once the result is unreferenced
-    * (same lifecycle as [[dedupComponents]]). At corpus scale callers
-    * skip this entirely (localCheckpoint blocks are unreplicated —
+    * branch but is a trivial narrow op over checkpointed rows. At corpus
+    * scale callers skip this entirely (leaf blocks are unreplicated —
     * wrong durability for a whole-corpus artifact): persist sketches as
     * an aux table and call the `FromSketches` variants instead. */
   private def checkpointedSketches(documents: DataFrame, k: Int, bands: Int): DataFrame =
-    sketches(documents, k, bands)
-      .select("doc_id", "sig", "band_buckets").localCheckpoint(true)
+    Leaf(sketches(documents, k, bands).select("doc_id", "sig", "band_buckets"), eager = true)
 
   /** Default per-(band,bucket) occupancy cap for LSH candidate
     * generation. Never reached at the test SFs; at web scale it bounds
@@ -194,7 +192,7 @@ object DedupOps {
     // common case, where the frame is EMPTY). Checkpoint the tiny
     // result once; its materialized stats also let AQE collapse every
     // hot-side join to an empty relation without scanning `rows`.
-    val hotKeys = hotBucketKeys(rows, maxBucket, distinctDocs = false).localCheckpoint(true)
+    val hotKeys = Leaf(hotBucketKeys(rows, maxBucket, distinctDocs = false), eager = true)
     val coldPairs = selfPairs(rows.join(hotKeys, Seq("band", "bucket"), "left_anti"))
     // cold-corpus early exit (optimization r6): hotKeys is already
     // materialized, so emptiness is a bounded read of its cached blocks.
@@ -210,9 +208,8 @@ object DedupOps {
     val famStars = starsThrough(hotRows, fams, Seq("band", "bucket", "fam"))
     // same reasoning: famRows (one row per hot-bucket family) feeds four
     // branches; materialize it once instead of re-running the family agg
-    val famRows = fams.select(col("band"), col("bucket"),
-      col("rep.doc_id").as("doc_id"), col("rep.pl").as("pl"))
-      .localCheckpoint(true)
+    val famRows = Leaf(fams.select(col("band"), col("bucket"),
+      col("rep.doc_id").as("doc_id"), col("rep.pl").as("pl")), eager = true)
     val famHotKeys = hotBucketKeys(famRows, maxBucket, distinctDocs = false)
     val famColdPairs = selfPairs(famRows.join(famHotKeys, Seq("band", "bucket"), "left_anti"))
     val famHotRows = famRows.join(famHotKeys, Seq("band", "bucket"))
@@ -241,7 +238,7 @@ object DedupOps {
     * [[familyGuardedPairs]].
     *
     * EAGER: constructing the returned DataFrame materializes the sketch
-    * pass via localCheckpoint (ADVICE r4 — the guard's multi-branch plan
+    * pass as an eager leaf (ADVICE r4 — the guard's multi-branch plan
     * demands it; plan-only consumers like PlanAudit pay that job). At
     * corpus scale use the `FromSketches` variant over a persisted sketch
     * table, which stays lazy on the caller's side. */
@@ -334,8 +331,7 @@ object DedupOps {
     // fail fast BEFORE the eager corpus shingle pass below
     require(tn >= 1 && td >= tn, s"threshold tn/td in (0,1]: $tn/$td")
     // build-once arrays feed the prefix build AND both verify sides
-    prefixSimJoinFromSets(
-      shingleSets(documents, shingleWidth).localCheckpoint(true), tn, td)
+    prefixSimJoinFromSets(Leaf(shingleSets(documents, shingleWidth), eager = true), tn, td)
   }
 
   /** [[prefixSimJoin]] over an ALREADY-MATERIALIZED (doc_id, shingles)
@@ -422,7 +418,7 @@ object DedupOps {
     require(tn >= 1 && td >= tn, s"threshold tn/td in (0,1]: $tn/$td")
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     containmentJoinFromSets(
-      shingleSets(documents, shingleWidth).localCheckpoint(true), tn, td, maxDf)
+      Leaf(shingleSets(documents, shingleWidth), eager = true), tn, td, maxDf)
   }
 
   /** [[containmentJoin]] over an already-materialized (doc_id, shingles)
@@ -479,8 +475,7 @@ object DedupOps {
     // candidates feed three plan branches (both id sides + the verify
     // join); materialize the id pairs once — at corpus scale this is the
     // artifact a production run would persist anyway
-    val candidates = minhashCandidates(documents, k, bands, maxBucket)
-      .localCheckpoint(true)
+    val candidates = Leaf(minhashCandidates(documents, k, bands, maxBucket), eager = true)
     val candIds = candidates.select(col("a").as("cid"))
       .union(candidates.select(col("b").as("cid"))).distinct()
     val candDocs = documents.join(candIds,
@@ -576,7 +571,7 @@ object DedupOps {
     // whole corpus table per batch would not be.
     val newSide =
       if (newSketches.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        newSketches.select(col("doc_id"), col("sig"), col("band_buckets")).localCheckpoint(true)
+        Leaf(newSketches.select(col("doc_id"), col("sig"), col("band_buckets")), eager = true)
       else newSketches.select(col("doc_id"), col("sig"), col("band_buckets"))
     val nb = buckets(newSide
       // the new batch supersedes every persisted sketch by definition
@@ -685,29 +680,26 @@ object DedupOps {
     * driver-side graph.
     * Output: (id, comp) where comp = min node id in the component — the
     * canonical "keeper" for dedup resolution (keep rows where id=comp).
-    * The returned frame is locally checkpointed (lineage truncated — the
+    * The returned frame is an eager leaf (lineage truncated — the
     * iterative join chain never recomputes) and carries NO named cache
-    * entry, so driver-run queries don't accumulate cached partitions; the
-    * checkpoint blocks are reclaimed by the ContextCleaner once the frame
-    * is unreferenced (ADVICE r3: the returned cache leaked in every
-    * Verify/Bench run, and the error path leaked the last round's cache).
+    * entry, so driver-run queries don't accumulate cached partitions
+    * (ADVICE r3: the returned cache leaked in every Verify/Bench run, and
+    * the error path leaked the last round's cache).
     * Fails loudly if labels have not converged within `maxIter` rounds —
     * silently returning partial components would disagree with the
     * transitive closure the oracle computes. */
   def dedupComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // per-round localCheckpoint, not cache: a cache reuses EXECUTION but
-    // leaves the logical plan growing ~3x per round (labels is referenced
-    // by three branches each iteration) — at component diameter ~10+ the
-    // plan tree alone OOMs the driver before any task runs (caught by
+    // a leaf per round, not cache: a cache reuses EXECUTION but leaves the
+    // logical plan growing ~3x per round (labels is referenced by three
+    // branches each iteration) — at component diameter ~10+ the plan tree
+    // alone OOMs the driver before any task runs (caught by
     // GraphPropertySpec's random graphs; production near-dup clusters are
-    // diameter 1-2, which is why cache survived four rounds). Checkpoint
-    // blocks are reclaimed by the ContextCleaner as each round's frame
-    // becomes unreferenced.
-    val und = pairs.select(col("a").as("x"), col("b").as("y"))
+    // diameter 1-2, which is why cache survived four rounds).
+    val und = Leaf(pairs.select(col("a").as("x"), col("b").as("y"))
       .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))
-      .distinct().localCheckpoint(true)
-    var labels = und.select(col("x").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint(true)
+      .distinct(), eager = true)
+    var labels = Leaf(und.select(col("x").as("id")).distinct()
+      .withColumn("comp", col("id")), eager = true)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -731,20 +723,19 @@ object DedupOps {
       // (left + coalesce only for paranoia).
       //
       // Optimization r6: the round's frame CARRIES the previous label
-      // (`old`) instead of re-joining labels for change detection, and
-      // the checkpoint is LAZY — the convergence count() materializes
-      // every partition, so one round = exactly one job (the eager form
-      // ran checkpoint + a join-bearing count = two jobs and one more
-      // equi-join per round). By the time round i+1 references `next`
-      // three ways, its blocks are already materialized by this count.
-      val next = labels
+      // (`old`) instead of re-joining labels for change detection (one
+      // equi-join fewer per round). The leaf is EAGER: it truncates the
+      // lineage each round, so the loop holds one round's blocks. A lazy
+      // leaf ran one job per round, not two (the leaf's and this count),
+      // but kept every round's blocks while the result lived: 15 cached
+      // RDDs and 5.5 MB for a 4,096-node chain, against 1 RDD and 0.37 MB.
+      val next = Leaf(labels
         .join(nbrMin, Seq("id"), "left")
         .join(labels.select(col("id").as("jump_from"), col("comp").as("jump_to")),
           col("comp") === col("jump_from"), "left")
         .select(col("id"), col("comp").as("old"), least(col("comp"),
           coalesce(col("nbr"), col("comp")),
-          coalesce(col("jump_to"), col("comp"))).as("comp"))
-        .localCheckpoint(false)
+          coalesce(col("jump_to"), col("comp"))).as("comp")), eager = true)
       changed = next.filter(col("comp") =!= col("old")).count()
       labels = next.select(col("id"), col("comp"))
       i += 1
@@ -783,7 +774,7 @@ object DedupOps {
       maxIter: Int = 20): DataFrame = {
     // labels feed three branches (two endpoint resolves + the relabel
     // join) — the multi-branch rule; rows are 16-byte (id, comp)
-    val labels = existingLabels.select(col("id"), col("comp")).localCheckpoint(true)
+    val labels = Leaf(existingLabels.select(col("id"), col("comp")), eager = true)
     val quotientEdges = newEdges.select(col("a"), col("b"))
       .join(labels.select(col("id").as("a"), col("comp").as("ca")), Seq("a"), "left")
       .join(labels.select(col("id").as("b"), col("comp").as("cb")), Seq("b"), "left")
@@ -856,7 +847,7 @@ object DedupOps {
   def simhashNearDups(documents: DataFrame, maxHamming: Int = 3,
                       maxBucket: Int = DefaultMaxBucket): DataFrame =
     simhashNearDupsFromSigs(
-      sketches(documents).select("doc_id", "simhash").localCheckpoint(true),
+      Leaf(sketches(documents).select("doc_id", "simhash"), eager = true),
       maxHamming, maxBucket)
 
   /** Banded candidate join + exact hamming filter over a persisted

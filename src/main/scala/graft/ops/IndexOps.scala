@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Retrieval-index operators over the `documents` table: inverted-index
   * construction (the posting-list artifact a web-scale search / RAG
@@ -132,10 +133,10 @@ object IndexOps {
     require(queryTerms.nonEmpty && k >= 1)
     val spark = documents.sparkSession
     import spark.implicits._
-    val docToks = documents.select(col("doc_id").cast("long").as("doc_id"),
-      // lazy: the stats collect below materializes the blocks, the tf
-      // branch then reads them (one job, not two — optimization r6)
-      toks(col("text")).as("w")).localCheckpoint(false)
+    // lazy: the stats collect below fills the blocks, the tf branch then
+    // reads them (one job, not two — optimization r6)
+    val docToks = Leaf(documents.select(col("doc_id").cast("long").as("doc_id"),
+      toks(col("text")).as("w")), eager = false)
     val Array(nDocs, totToks) = docToks
       .agg(count(lit(1)), sum(size(col("w")))).collect()
       .map(r => Array(r.getLong(0), r.getLong(1))).head

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** HyperLogLog cardinality sketches and their webgraph application
   * (HyperBall-style r-hop neighborhood-size estimation).
@@ -172,7 +173,7 @@ object SketchOps {
     *
     * Per round: contributions = edges ⋈ state (register arrays ride the
     * join keyed by edge target), then one max-merge hash-aggregate per
-    * node. State is localCheckpoint'd each round — the repo's
+    * node. State is cut to an eager leaf each round — the repo's
     * multi-branch/iterative-plan rule (pointer-jumping lesson, BENCH/
     * PLANS.md): without it round r replays rounds 1..r-1.
     *
@@ -185,24 +186,21 @@ object SketchOps {
     import spark.implicits._
     val merge = functions.udaf(new RegMergeAgg(p), Encoders.BINARY)
 
-    val edges = triples
+    val edges = Leaf(triples
       .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
       .select(asciiGuarded(col("subj")).as("src"), asciiGuarded(col("objValue")).as("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
 
-    var state = nodes.as[String].map(n => (n, registersOf(n, p)))
-      .toDF("node", "regs")
-      .localCheckpoint(true)
+    var state = Leaf(nodes.as[String].map(n => (n, registersOf(n, p)))
+      .toDF("node", "regs"), eager = true)
     var r = 0
     while (r < radius) {
       val contrib = edges.join(state, edges("dst") === state("node"))
         .select(edges("src").as("node"), col("regs"))
-      state = state.union(contrib)
-        .groupBy("node").agg(merge(col("regs")).as("regs"))
-        .localCheckpoint(true)
+      state = Leaf(state.union(contrib)
+        .groupBy("node").agg(merge(col("regs")).as("regs")), eager = true)
       r += 1
     }
     state.as[(String, Array[Byte])]

@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Repartition}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.col
 
 /** Scan-parallelism floor for per-row-CPU-heavy operator inputs
@@ -26,18 +29,31 @@ import org.apache.spark.sql.functions.col
   * cores.
   */
 object Spread {
-  /** CONTRACT: pass a raw file read or an already-materialized
-    * (checkpointed) frame. The split probe below goes through `df.rdd`:
-    * on a file scan or a checkpointed frame it starts no job, while on a
-    * frame with UNMATERIALIZED upstream exchanges AQE would materialize
-    * those query stages right here, and the caller would re-execute them
-    * at action time. The probe counts the scan's splits, not its files:
+  /** CONTRACT, checked: pass a raw file read or an already-materialized
+    * frame (a `graftshim.Leaf`, or driver-local rows), under nothing but
+    * projections, filters and coalesces. The split probe below goes
+    * through `df.rdd`: on such a frame it starts no job, while on a frame
+    * with UNMATERIALIZED upstream exchanges AQE would materialize those
+    * query stages right here, and the caller would re-execute them at
+    * action time. The probe counts the scan's splits, not its files:
     * many small files bin-pack into fewer splits. */
   def minParallel(df: DataFrame, key: String): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    require(narrowOverLeaves(plan),
+      "Spread.minParallel takes a file read or a Leaf under projections, filters and coalesces, got:\n" +
+        plan.treeString)
     val session = df.sparkSession
     val target = math.min(session.sessionState.conf.numShufflePartitions,
       session.sparkContext.defaultParallelism)
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, col(key))
+  }
+
+  private def narrowOverLeaves(p: LogicalPlan): Boolean = p match {
+    case _: LogicalRelation | _: LogicalRDD | _: LocalRelation => true
+    case Project(_, child) => narrowOverLeaves(child)
+    case Filter(_, child) => narrowOverLeaves(child)
+    case Repartition(_, false, child) => narrowOverLeaves(child)
+    case _ => false
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Text-analysis operators for a large-scale training-data pipeline,
   * expressed with codegen'd built-in functions wherever possible (no
@@ -170,12 +171,11 @@ object TextOps {
         keyed(col("w1"), ("p1", "p2")) ++ keyed(col("w2"), ("s1", "s2")): _*)
     // p/s keys are functions of the (h1,h2) key — min() just picks the
     // constant, keeping the agg a single map-side-combining shuffle
-    val c2 = biKeys.groupBy("h1", "h2").agg(count(lit(1)).as("pair_n"),
+    // lazy: the N-scalar collect right below fills the blocks; the pmi
+    // join then reads them (one job, not two — optimization r6)
+    val c2 = Leaf(biKeys.groupBy("h1", "h2").agg(count(lit(1)).as("pair_n"),
       min(col("p1")).as("p1"), min(col("p2")).as("p2"),
-      min(col("s1")).as("s1"), min(col("s2")).as("s2"))
-      // lazy: the N-scalar collect right below materializes the blocks;
-      // the pmi join then reads them (one job, not two — optimization r6)
-      .localCheckpoint(false)
+      min(col("s1")).as("s1"), min(col("s2")).as("s2")), eager = false)
     val totN = c2.agg(sum(col("pair_n"))).first().getLong(0)
     val lgN = {
       val il = 63 - java.lang.Long.numberOfLeadingZeros(totN)

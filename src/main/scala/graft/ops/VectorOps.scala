@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Similarity search over the `embeddings(vec_id, embedding: array<float>,
   * label)` table. Baseline: brute-force cosine top-k with codegen'd array
@@ -163,7 +164,7 @@ object VectorOps {
     * in-body comment).
     *
     * EAGER: constructing the returned DataFrame materializes the sketch
-    * pass via localCheckpoint (the guard references it from several plan
+    * pass as an eager leaf (the guard references it from several plan
     * branches; ADVICE r4) — plan-only consumers pay that one job. */
   def cosineNearDups(vectors: DataFrame, threshold: Double = 0.95,
                      planes: Int = 96, bands: Int = 12, seed: Long = 42L,
@@ -186,10 +187,9 @@ object VectorOps {
     // candidate generation (exact cosine rejoins by id). The keys-only
     // rows frame is checkpointed so the projection pass (and any
     // upstream unions) runs once, not once per guard branch.
-    val rows = sketchKeysWithFam(vectors, planes, bands, seed)
+    val rows = Leaf(sketchKeysWithFam(vectors, planes, bands, seed)
       .select(col("vec_id").as("doc_id"), col("band"), col("key").as("bucket"),
-        col("fam"), lit(0L).as("pl"))
-      .localCheckpoint(true)
+        col("fam"), lit(0L).as("pl")), eager = true)
     val cand = DedupOps.familyGuardedPairs(rows, maxBucket)
       .select(col("a"), col("b")).dropDuplicates("a", "b")
     GraftFunctions.register(vectors.sparkSession)
@@ -378,7 +378,7 @@ object VectorOps {
     *      cosine is computed in the same pass — one corpus scan;
     *   2. the (vec_id, cell, ccos) frame is keys-only (20 bytes/row) and
     *      feeds four plan branches (both pair sides, occupancy, output) —
-    *      localCheckpoint(true), the repo's multi-branch rule. NOTE: this
+    *      an eager leaf, the repo's multi-branch rule. NOTE: this
     *      makes the builder EAGER (it launches the assignment scan);
     *   3. cells over `maxCell` are EXCLUDED from pairing — loudly visible
     *      as keep=true whole cells (a B-member cell is B²/2 pairs; at web
@@ -393,14 +393,13 @@ object VectorOps {
     val spark = vectors.sparkSession
     import spark.implicits._
     val norms = centroids.map(normScalar)
-    val cc = vectors.select(col("vec_id"), col("emb")).as[(Long, Array[Double])]
+    val cc = Leaf(vectors.select(col("vec_id"), col("emb")).as[(Long, Array[Double])]
       .mapPartitions { it =>
         it.map { case (id, v) =>
           val cell = nearestCells(v, centroids, norms, 1)(0)
           (id, cell, cosineScalar(v, centroids(cell), normScalar(v), norms(cell)))
         }
-      }.toDF("vec_id", "cell", "ccos")
-      .localCheckpoint(true)
+      }.toDF("vec_id", "cell", "ccos"), eager = true)
     val okCells = cc.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .filter(col("n") <= maxCell).select(col("cell"))
     val paired = cc.join(okCells, Seq("cell"))

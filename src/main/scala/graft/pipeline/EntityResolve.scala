@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Dictionary-free entity resolution over the constructed graph: the
   * blocking + pairwise-scoring step classic ER pipelines run to DISCOVER
@@ -60,7 +61,7 @@ object EntityResolve {
     // `block` — ReuseExchange computes the blocking pass once, no
     // checkpoint needed (optimization r6)
     val blocked = names.join(okBlocks, Seq("block"))
-    val pairs = blocked.as("x")
+    val pairs = Leaf(blocked.as("x")
       .join(blocked.as("y"),
         col("x.block") === col("y.block") && col("x.entity") < col("y.entity"))
       .select(col("x.entity").as("a"), col("y.entity").as("b"))
@@ -69,12 +70,10 @@ object EntityResolve {
       // every shared attribute once per meeting, inflating `shared` past
       // the set size and driving uni = ca+cb-shared to 0, which silently
       // DROPS exact duplicates (review r5: empirically demonstrated)
-      .distinct()
-      .localCheckpoint(true) // read by the score join AND the final assembly
-    val attrs = triples.filter(col("objKind") === 2 && col("pred") =!= namePred)
+      .distinct(), eager = true) // read by the score join AND the final assembly
+    val attrs = Leaf(triples.filter(col("objKind") === 2 && col("pred") =!= namePred)
       .select(col("subj").as("entity"), col("pred"), col("objValue"))
-      .distinct()
-      .localCheckpoint(true) // read by the shared join (twice) AND the size agg
+      .distinct(), eager = true) // read by the shared join (twice) AND the size agg
     val sizes = attrs.groupBy(col("entity")).agg(count(lit(1)).as("na"))
     val shared = pairs
       .join(attrs.select(col("entity").as("a"), col("pred"), col("objValue")), Seq("a"))

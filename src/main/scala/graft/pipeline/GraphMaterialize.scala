@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Graph materialization + entity linking (north rule):
   * adjacency table, hot-entity broadcast join, salted cold join for
@@ -192,9 +193,8 @@ object GraphMaterialize {
     // so one eager materialization is cheap at every scale. NOTE: this
     // makes the builder EAGER — constructing the plan launches the
     // occupancy job (same contract as the dedup entry points).
-    val hotSurfaces = m.groupBy(col("surface")).agg(count(lit(1)).as("n_m"))
-      .filter(col("n_m") >= hotMentionCount).select(col("surface"))
-      .localCheckpoint(true)
+    val hotSurfaces = Leaf(m.groupBy(col("surface")).agg(count(lit(1)).as("n_m"))
+      .filter(col("n_m") >= hotMentionCount).select(col("surface")), eager = true)
     val hotLinked = m.join(broadcast(hotSurfaces), Seq("surface"), "left_semi")
       .join(broadcast(dict.join(broadcast(hotSurfaces), Seq("surface"), "left_semi")),
         Seq("surface"), "left")
@@ -379,16 +379,14 @@ object GraphMaterialize {
     * agg partial map-side. Nothing collects; the only small frame is
     * the output itself. */
   def schemaGraph(triples: DataFrame): DataFrame = {
-    val csMap = csBySubject(triples).select(col("subj"), col("cs"))
-      // computed ONCE: the two endpoint joins push different filters
-      // (inner adds isnotnull(subj), left outer doesn't) into otherwise-
-      // identical agg subtrees, which defeats ReusedExchange — without
-      // the checkpoint the corpus-sized census runs twice per action
-      // (probe-verified). At production scale this map is the build-once
-      // artifact you'd persist next to the sketch tables anyway. Eager
-      // by contract, like the other checkpointed builders; blocks are
-      // reclaimed by the ContextCleaner once the frame is unreferenced.
-      .localCheckpoint(true)
+    // computed ONCE: the two endpoint joins push different filters
+    // (inner adds isnotnull(subj), left outer doesn't) into otherwise-
+    // identical agg subtrees, which defeats ReusedExchange — without
+    // the cut the corpus-sized census runs twice per action
+    // (probe-verified). At production scale this map is the build-once
+    // artifact you'd persist next to the sketch tables anyway. Eager
+    // by contract, like the other checkpointed builders.
+    val csMap = Leaf(csBySubject(triples).select(col("subj"), col("cs")), eager = true)
     val edges = triples.filter(col("objKind").isin(0, 1)) // node-to-node (IRI + bnode)
       .select(col("subj"), col("pred"), col("objValue"))
     edges
@@ -528,16 +526,14 @@ object GraphMaterialize {
       // frontier_{d-1} AND visited_{d-1} (itself a union of every earlier
       // frontier), so un-truncated the optimizer's input grows
       // quadratically with depth — a depth-8 frame hands Catalyst dozens
-      // of copies of the same join subtree. Every few levels, truncate
+      // of copies of the same join subtree. Every few levels, cut
       // the two iteration-state frames (both are two-string-column,
-      // keys-only) with a LAZY localCheckpoint: the logical plan becomes
-      // a LogicalRDD at construction (plan growth reset to O(1) per
-      // level), while the RDD itself only materializes — once, then
-      // persisted — at the caller's first action, keeping this builder
-      // lazy for plan-only consumers (ADVICE r4).
+      // keys-only) to leaves: plan growth resets to O(1) per level.
+      // Lazy, so the builder stays lazy for plan-only consumers
+      // (ADVICE r4).
       if (d % 3 == 0 && d < depth) {
-        next = next.localCheckpoint(false)
-        visited = visited.localCheckpoint(false)
+        next = Leaf(next, eager = false)
+        visited = Leaf(visited, eager = false)
       }
       acc = acc.unionByName(levelRows(next, d))
       visited = visited.unionByName(next)
@@ -580,43 +576,20 @@ object GraphMaterialize {
     * nodes < ~1e8 to stay in a signed 64-bit long; at larger graphs
     * shrink the unit (e.g. 1e6) — the ranking is unit-invariant.
     *
-    * Scale shape: edges+degrees are computed ONCE and localCheckpointed
-    * LAZILY (each iteration references them; an un-truncated chain would
-    * re-scan the triple table per iteration — the multi-branch rule; the
-    * lazy form materializes the blocks inside the first consuming job and
-    * ReuseExchange serves every later iteration, so no standalone
-    * checkpoint job runs — optimization r6). Per iteration: one equi-join
-    * on src + one hash agg on dst, 24-byte rows, map-side partial sums.
-    * Score frames are checkpointed LAZILY per round: the logical plan
-    * each round hands Catalyst stays O(1)-deep (an unrolled 6-iteration
-    * plan was A/B-measured ~20% SLOWER than round 5 purely from
-    * superlinear optimizer/AQE cost on the deep join tree), but no
-    * per-round job runs — the caller's one action materializes the whole
-    * cached-RDD chain. */
-  def hubScores(triples: DataFrame, iterations: Int = 6): DataFrame = {
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct()
-    val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // (src, dst, out_degree) — the loop-invariant frame, built once
-    val withDeg = edges.join(outDeg, Seq("src")).localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    var scores = nodes.select(col("node"), lit(1000000000L).as("score"))
-    for (_ <- 1 to iterations) {
-      val inSums = withDeg
-        .join(scores.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), expr("score div d").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("insum"))
-      scores = nodes.join(inSums, Seq("node"), "left")
-        .select(col("node"),
-          (lit(150000000L) + expr("(85 * coalesce(insum, 0L)) div 100")).as("score"))
-        .localCheckpoint(false)
-    }
-    scores
-  }
+    * Scale shape: edges+degrees are computed ONCE and cut to a lazy
+    * leaf (each iteration references them; an un-truncated chain would
+    * re-scan the triple table per iteration — the multi-branch rule;
+    * lazily, so the first consuming job fills the blocks and
+    * ReuseExchange serves every later iteration, with no standalone job
+    * — optimization r6). Per iteration: one equi-join on src + one hash
+    * agg on dst, 24-byte rows, map-side partial sums. Score frames are
+    * cut LAZILY per round: the logical plan each round hands Catalyst
+    * stays O(1)-deep (an unrolled 6-iteration plan was A/B-measured ~20%
+    * SLOWER than round 5 purely from superlinear optimizer/AQE cost on
+    * the deep join tree), but no per-round job runs — the caller's one
+    * action fills every round's blocks. */
+  def hubScores(triples: DataFrame, iterations: Int = 6): DataFrame =
+    pageRank(triples, lit(true), iterations)
 
   /** Personalized PageRank (random walk with restart) over the directed
     * entity graph: [[hubScores]] with the teleport mass concentrated on a
@@ -628,30 +601,25 @@ object GraphMaterialize {
     * `score div out_degree`, damping 85/100 via exact integer ops) so a
     * staged-CTE SQL oracle replays every iteration bit-for-bit; seeds
     * restart at 150000000 per iteration, non-seeds at 0, init 1e9 on
-    * seeds only.
-    *
-    * Scale shape inherited from [[hubScores]]: the loop-invariant
-    * (src, dst, out_degree) frame and the node set are lazily
-    * checkpointed once (materialized inside the first consuming job,
-    * ReuseExchange thereafter); each iteration is one key-partitioned
-    * join + one map-side-combining sum agg; scores are 16-byte
-    * (node, long) rows, lazily checkpointed per round (flat per-round
-    * plans, zero per-round jobs — the hubScores r6 discipline). The
-    * seed predicate is a broadcast-trivial `isin` literal (seed sets
-    * are human-scale). */
+    * seeds only. The seed predicate is a broadcast-trivial `isin`
+    * literal (seed sets are human-scale). */
   def personalizedPageRank(triples: DataFrame, seeds: Seq[String],
       iterations: Int = 6): DataFrame = {
     require(seeds.nonEmpty, "seed set must be non-empty")
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct()
+    pageRank(triples, col("node").isin(seeds: _*), iterations)
+  }
+
+  /** The one rank loop of [[hubScores]] (every node a seed) and
+    * [[personalizedPageRank]]: init 1e9 and teleport 150000000 on the
+    * nodes `isSeed` holds for, 0 elsewhere. */
+  private def pageRank(triples: DataFrame, isSeed: Column, iterations: Int): DataFrame = {
+    val edges = directedEdges(triples)
     val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    val withDeg = edges.join(outDeg, Seq("src")).localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
+    // (src, dst, out_degree) — the loop-invariant frame, built once
+    val withDeg = Leaf(edges.join(outDeg, Seq("src")), eager = false)
+    val nodes = Leaf(edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    val isSeed = col("node").isin(seeds: _*)
+      .distinct(), eager = false)
     var scores = nodes.select(col("node"),
       when(isSeed, lit(1000000000L)).otherwise(lit(0L)).as("score"))
     for (_ <- 1 to iterations) {
@@ -659,14 +627,21 @@ object GraphMaterialize {
         .join(scores.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), expr("score div d").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("insum"))
-      scores = nodes.join(inSums, Seq("node"), "left")
+      scores = Leaf(nodes.join(inSums, Seq("node"), "left")
         .select(col("node"),
           (when(isSeed, lit(150000000L)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(insum, 0L)) div 100")).as("score"))
-        .localCheckpoint(false)
+            expr("(85 * coalesce(insum, 0L)) div 100")).as("score")), eager = false)
     }
     scores
   }
+
+  /** Distinct directed (src, dst) IRI edges without self-loops: the edge
+    * frame of [[pageRank]] and [[hitsScores]]. */
+  private def directedEdges(triples: DataFrame): DataFrame =
+    triples
+      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
+      .select(col("subj").as("src"), col("objValue").as("dst"))
+      .distinct()
 
   /** HITS hubs/authorities over the directed entity graph (Kleinberg
     * 1999, public paper — PAPERS.md): the mutually-recursive twin of
@@ -689,7 +664,7 @@ object GraphMaterialize {
     * rescale multiply caps at raw·1e6 ≤ 1e18 for max_degree < 1e6 —
     * comfortable in a signed long for any degree-capped crawl graph.
     *
-    * Scale shape: edges/nodes built once and lazily localCheckpointed;
+    * Scale shape: edges/nodes built once and cut to lazy leaves;
     * per half-step one equi-join + one hash agg over 16-byte rows with
     * map-side partial sums. The rescale max is a 1-ROW AGGREGATE FRAME
     * broadcast back into the plan (`crossJoin(broadcast(mx))`) instead
@@ -700,17 +675,14 @@ object GraphMaterialize {
     * iterations=3), this runs the caller's one action plus the bounded
     * broadcast sub-stages (same-window A/B: ~20-25% faster at sf0.1,
     * and at cluster scale each removed collect is a removed
-    * full-pipeline barrier). `raw` is lazily checkpointed because both
+    * full-pipeline barrier). `raw` is a lazy leaf because both
     * the max aggregate and the rescale join consume it; plans stay
     * O(1)-deep per half-step exactly as before. */
   def hitsScores(triples: DataFrame, iterations: Int = 3): DataFrame = {
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct().localCheckpoint(false)
-    val nodes = edges.select(col("src").as("node"))
+    val edges = Leaf(directedEdges(triples), eager = false)
+    val nodes = Leaf(edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
+      .distinct(), eager = false)
 
     // one rescaled half-step: raw in-sums joined back onto all nodes
     // (score 0 where no edge contributes), scaled to max 1e6 —
@@ -718,17 +690,15 @@ object GraphMaterialize {
     // oracle (GREATEST(..., 1))
     def halfStep(scores: DataFrame, scoreCol: String, joinSide: String,
         emitSide: String, outCol: String): DataFrame = {
-      val raw = edges
+      val raw = Leaf(edges
         .join(scores.withColumnRenamed("node", joinSide), Seq(joinSide))
         .groupBy(col(emitSide).as("node"))
-        .agg(sum(col(scoreCol)).as("raw"))
-        .localCheckpoint(false)
+        .agg(sum(col(scoreCol)).as("raw")), eager = false)
       val mx = raw.agg(greatest(max(col("raw")), lit(1L)).as("mx"))
-      nodes.join(raw, Seq("node"), "left")
+      Leaf(nodes.join(raw, Seq("node"), "left")
         .crossJoin(broadcast(mx))
         .select(col("node"),
-          expr("(coalesce(raw, 0L) * 1000000) div mx").as(outCol))
-        .localCheckpoint(false)
+          expr("(coalesce(raw, 0L) * 1000000) div mx").as(outCol)), eager = false)
     }
 
     var hub = nodes.select(col("node"), lit(1000000L).as("h"))
@@ -830,10 +800,7 @@ object GraphMaterialize {
     * count), so it is checkpointed once. All exchanges carry node-id
     * pairs; the final distinct+count is one hash agg. */
   def twoHopCounts(triples: DataFrame, maxDegree: Int = 64): DataFrame = {
-    val edges = triples
-      .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
-      .select(col("subj").as("src"), col("objValue").as("dst"))
-      .distinct().localCheckpoint(true)
+    val edges = Leaf(directedEdges(triples), eager = true)
     val okMid = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDegree).select(col("src"))
     val second = edges.join(okMid, Seq("src"))
@@ -873,19 +840,19 @@ object GraphMaterialize {
     * carries node-id pairs only. */
   def triangleCounts(triples: DataFrame): DataFrame = {
     val und = undirectedEdges(triples)
-    val deg = und.select(col("a").as("node"))
+    val deg = Leaf(und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true) // feeds orientation (twice) + the final assembly
+      .groupBy(col("node")).agg(count(lit(1)).as("degree")),
+      eager = true) // feeds orientation (twice) + the final assembly
     // orient a→b when (deg, id) of a precedes b; a < b by construction,
     // so ties on degree keep the id orientation
     val fwd = col("da") <= col("db")
-    val oriented = und
+    val oriented = Leaf(und
       .join(deg.select(col("node").as("a"), col("degree").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("degree").as("db")), Seq("b"))
       .select(when(fwd, col("a")).otherwise(col("b")).as("src"),
-        when(fwd, col("b")).otherwise(col("a")).as("dst"))
-      .localCheckpoint(true) // both sides of the wedge join
+        when(fwd, col("b")).otherwise(col("a")).as("dst")),
+      eager = true) // both sides of the wedge join
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
@@ -937,11 +904,11 @@ object GraphMaterialize {
     * once as (a < b). Checkpointed: every caller fans it into multiple
     * plan branches (the multi-branch rule). */
   private def undirectedEdges(triples: DataFrame): DataFrame =
-    triples
+    Leaf(triples
       .filter(col("objKind") === 0 && col("subj") =!= col("objValue"))
       .select(least(col("subj"), col("objValue")).as("a"),
         greatest(col("subj"), col("objValue")).as("b"))
-      .distinct().localCheckpoint(true)
+      .distinct(), eager = true)
 
   /** Synchronous label propagation over the undirected IRI graph — the
     * community signal used for host clustering, link-farm grouping, and
@@ -957,23 +924,22 @@ object GraphMaterialize {
     * checkpointed (it is re-joined every round). Per round: one equi-join
     * of labels onto edge targets + one hash agg on (node, label) with
     * map-side partial counts + one order-independent min(struct(-count,
-    * label)) agg — never a window over an unordered tie; labels are
-    * checkpointed per round so the plan stays O(1) deep (the hubScores
-    * loop discipline). All exchanges carry (id, label) pairs. Eager by
-    * contract. */
+    * label)) agg — never a window over an unordered tie; past the
+    * default 4 rounds, labels are cut to a leaf every 4th round so the
+    * plan stays at most 4 rounds deep. All exchanges carry (id, label)
+    * pairs. Eager by contract. */
   def labelPropagation(triples: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1)
     val und = undirectedEdges(triples)
-    // lazy checkpoint: sym is re-joined every round (multi-branch), but
-    // materializing it needs no standalone job — the caller's one action
+    // lazy leaf: sym is re-joined every round (multi-branch), but
+    // filling it needs no standalone job — the caller's one action
     // computes it once and ReuseExchange serves the later rounds. Label
     // frames are referenced exactly once each (by the next round), so the
     // unrolled plan is LINEAR in the fixed round count and needs no
-    // per-round checkpoint at all (optimization r6 — the eager form ran
-    // one job per round).
-    val sym = und.select(col("a").as("x"), col("b").as("y"))
-      .unionByName(und.select(col("b").as("x"), col("a").as("y")))
-      .localCheckpoint(false)
+    // per-round cut at all (optimization r6 — the eager form ran one job
+    // per round).
+    val sym = Leaf(und.select(col("a").as("x"), col("b").as("y"))
+      .unionByName(und.select(col("b").as("x"), col("a").as("y"))), eager = false)
     var labels = sym.select(col("x").as("node")).distinct()
       .select(col("node"), col("node").as("community"))
     for (r <- 1 to rounds) {
@@ -983,12 +949,12 @@ object GraphMaterialize {
         .groupBy(col("x"))
         .agg(min(struct((-col("cnt")).as("nc"), col("community").as("l"))).as("m"))
         .select(col("x").as("node"), col("m.l").as("community"))
-      // depth bound for NON-default round counts: a lazy checkpoint every
+      // depth bound for NON-default round counts: a lazy leaf every
       // 4th round caps the unrolled join tree at 4 rounds' depth (the
       // hubScores measurement: optimizer cost on deep unrolled trees is
       // superlinear), while the default rounds=4 keeps the fully-fused
-      // zero-checkpoint plan that A/B-measured fastest
-      if (r % 4 == 0 && r < rounds) labels = labels.localCheckpoint(false)
+      // zero-cut plan that A/B-measured fastest
+      if (r % 4 == 0 && r < rounds) labels = Leaf(labels, eager = false)
     }
     labels
   }
@@ -1011,15 +977,16 @@ object GraphMaterialize {
     * never masquerade as the answer. */
   def kCore(triples: DataFrame, k: Int = 2, maxRounds: Int = 20): DataFrame = {
     require(k >= 1 && maxRounds >= 1)
-    // lazy checkpoints fused with the per-round convergence count: the
-    // count() materializes every partition of the round's frame, so each
-    // round costs exactly ONE job (the eager form ran checkpoint + count
-    // = two; optimization r6). Plan depth unchanged — lineage truncates
-    // at the same frames.
+    // the first live set is a lazy leaf that its count() fills (one job).
+    // Each round's survivors are an EAGER leaf, which truncates the
+    // lineage, so the loop holds one round's blocks; a round is two jobs
+    // (the leaf's and the count). A lazy leaf per round ran one job but
+    // kept every round's blocks while the result lived: peeling a
+    // triangle's 14-node tail held 18 cached RDDs against 1.
     val und = undirectedEdges(triples)
-    var alive = und.select(col("a").as("node"))
+    var alive = Leaf(und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
-      .distinct().localCheckpoint(false)
+      .distinct(), eager = false)
     var aliveCount = alive.count()
     var rounds = 0
     while (rounds < maxRounds) {
@@ -1030,7 +997,7 @@ object GraphMaterialize {
       val deg = live.select(col("a").as("node"))
         .unionByName(live.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-      val next = deg.filter(col("core_deg") >= k).localCheckpoint(false)
+      val next = Leaf(deg.filter(col("core_deg") >= k), eager = true)
       val nextCount = next.count()
       if (nextCount == aliveCount) return next
       alive = next.select(col("node"))

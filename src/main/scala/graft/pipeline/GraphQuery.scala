@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Conjunctive graph-pattern queries over the materialized triples table
   * — the read-side counterpart of the KG-construction spine. Two entry
@@ -224,12 +225,10 @@ object GraphQuery {
     * anti-join (a node reached again at greater depth adds nothing).
     * Self-pairs (src = dst) ARE emitted when a cycle returns to its
     * origin (depth = cycle length) — both engines derive them alike.
-    * Eager by contract, like [[GraphMaterialize.hubScores]]; checkpoint
-    * blocks (edges + one per level) carry no named cache entry and are
-    * reclaimed by the ContextCleaner once the returned frame is
-    * unreferenced — a standalone 6-pass repeat run measured flat
-    * per-pass times, no block accumulation (the in-bench pass growth
-    * was session interference). */
+    * Eager by contract, like [[GraphMaterialize.hubScores]]; the leaves
+    * (edges + one per level) carry no named cache entry — a standalone
+    * 6-pass repeat run measured flat per-pass times, no block
+    * accumulation (the in-bench pass growth was session interference). */
   def pathClosure(triples: DataFrame, pred: String, maxDepth: Int,
       maxDegree: Int = 1024): DataFrame =
     pathClosure(triples, Seq(pred), maxDepth, maxDegree)
@@ -254,17 +253,16 @@ object GraphQuery {
     * both checkpointed — ONE definition of the guard so the closure and
     * the seeded-distances variants can never silently disagree. */
   private def guardedEdges(pairs: DataFrame, maxDegree: Int): (DataFrame, DataFrame) = {
-    // lazy checkpoints (optimization r6): the first BFS level's count()
-    // materializes `edges`; the first level-2 step materializes
-    // `extendable` — no standalone checkpoint jobs, same lineage
-    // truncation and multi-branch reuse as before.
-    val edges = pairs
+    // lazy leaves (optimization r6): the first BFS level's count()
+    // fills `edges`; the first level-2 step fills `extendable` — no
+    // standalone jobs, same plan cut and multi-branch reuse as before.
+    val edges = Leaf(pairs
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
-      .distinct().localCheckpoint(false)
+      .distinct(), eager = false)
     val okSrc = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .filter(col("d") <= maxDegree).select(col("src"))
-    (edges, edges.join(okSrc, Seq("src")).localCheckpoint(false))
+    (edges, Leaf(edges.join(okSrc, Seq("src")), eager = false))
   }
 
   /** Bounded `+` closure of an ARBITRARY (src, dst) pair frame — the
@@ -279,16 +277,15 @@ object GraphQuery {
     require(maxDepth >= 1, "maxDepth must be >= 1")
     val (edges, extendable) = guardedEdges(pairs, maxDegree)
 
-    // per-level frames are checkpointed LEAVES; the accumulated reach set
-    // is their union (never itself re-checkpointed — Spark 4's
-    // LogicalRDD constraint rewrite chokes on checkpoint-of-union-of-
-    // checkpoints, and the union of ≤ maxDepth materialized leaves is
-    // already O(1)-deep). Lazy checkpoints fused with the frontier
-    // emptiness check: count() materializes every partition of the level
-    // (isEmpty would stop at the first row and leave partitions
-    // unmaterialized), so one level = one job (the eager form ran
-    // checkpoint + isEmpty = two; optimization r6).
-    var levels = List(edges.withColumn("depth", lit(1)).localCheckpoint(false))
+    // per-level frames are LEAVES; the accumulated reach set is their
+    // union (never itself cut again — Spark 4's LogicalRDD constraint
+    // rewrite chokes on a leaf over a union of leaves, and the union of
+    // ≤ maxDepth leaves is already O(1)-deep). Lazy leaves fused with the
+    // frontier emptiness check: count() fills every partition of the
+    // level (isEmpty would stop at the first row and leave partitions
+    // unfilled), so one level = one job (the eager form ran checkpoint +
+    // isEmpty = two; optimization r6).
+    var levels = List(Leaf(edges.withColumn("depth", lit(1)), eager = false))
     var frontier = levels.head
     var d = 1
     var frontierNonEmpty = frontier.count() > 0
@@ -299,10 +296,9 @@ object GraphQuery {
         .select(col("f.src").as("src"), col("e.dst").as("dst"))
         .distinct()
       val seen = levels.map(_.select("src", "dst")).reduce(_ unionByName _)
-      val fresh = stepped
+      val fresh = Leaf(stepped
         .join(seen, Seq("src", "dst"), "left_anti")
-        .withColumn("depth", lit(d))
-        .localCheckpoint(false)
+        .withColumn("depth", lit(d)), eager = false)
       levels ::= fresh
       frontier = fresh
       frontierNonEmpty = fresh.count() > 0
@@ -329,7 +325,7 @@ object GraphQuery {
     * but paths only extend THROUGH sources with out-degree ≤
     * `maxDegree`. Per level: one key-partitioned join frontier⋈edges
     * (frontier rows are 8-byte-id + int), one distinct, one anti-join;
-    * each level frame is a checkpointed leaf (the multi-branch rule —
+    * each level frame is a leaf (the multi-branch rule —
     * the seen union references every prior level). Eager by contract. */
   def seededDistances(triples: DataFrame, seeds: Seq[String],
       preds: Seq[String], maxDepth: Int, maxDegree: Int = 1024): DataFrame = {
@@ -339,10 +335,10 @@ object GraphQuery {
     import spark.implicits._
     val (edges, extendable) = guardedEdges(predEdges(triples, preds), maxDegree)
 
-    // lazy checkpoint + count() per level, like [[closureOfEdges]]
+    // lazy leaf + count() per level, like [[closureOfEdges]]
     // (optimization r6): one job per BFS level instead of two
-    var levels = List(seeds.distinct.toDF("node")
-      .withColumn("dist", lit(0)).localCheckpoint(false))
+    var levels = List(Leaf(seeds.distinct.toDF("node")
+      .withColumn("dist", lit(0)), eager = false))
     var frontier = levels.head
     var d = 0
     var frontierNonEmpty = frontier.count() > 0
@@ -354,10 +350,9 @@ object GraphQuery {
         .join(step.as("e"), col("f.node") === col("e.src"))
         .select(col("e.dst").as("node")).distinct()
       val seen = levels.map(_.select("node")).reduce(_ unionByName _)
-      val fresh = stepped
+      val fresh = Leaf(stepped
         .join(seen, Seq("node"), "left_anti")
-        .withColumn("dist", lit(d))
-        .localCheckpoint(false)
+        .withColumn("dist", lit(d)), eager = false)
       levels ::= fresh
       frontier = fresh
       frontierNonEmpty = fresh.count() > 0

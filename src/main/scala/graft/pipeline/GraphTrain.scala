@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Leaf
 
 /** Training-data preparation over the constructed graph: dense entity
   * ids and negative sampling for KG-embedding training (TransE-family
@@ -30,16 +31,15 @@ object GraphTrain {
     * so id(entity) == `row_number() OVER (ORDER BY entity) - 1`, which is
     * exactly how the oracle recomputes it. */
   def denseEntityIds(triples: DataFrame, partitions: Int = 64): DataFrame = {
-    val ents = triples.select(col("subj").as("entity"))
+    // pins the range assignment; read twice below. Lazy: the bounded
+    // per-partition-count collect right after fills the blocks (one job,
+    // not two — optimization r6)
+    val ents = Leaf(triples.select(col("subj").as("entity"))
       .unionByName(triples.filter(col("objKind").isin(0, 1))
         .select(col("objValue").as("entity")))
       .distinct()
       .repartitionByRange(partitions, col("entity"))
-      .select(col("entity"), spark_partition_id().as("pid"))
-      // pins the range assignment; read twice below. Lazy: the bounded
-      // per-partition-count collect right after materializes the blocks
-      // (one job, not two — optimization r6)
-      .localCheckpoint(false)
+      .select(col("entity"), spark_partition_id().as("pid")), eager = false)
     val counts = ents.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("pid")).collect() // bounded: `partitions` rows
     val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), r) =>
@@ -82,11 +82,10 @@ object GraphTrain {
       .select(col("subj").as("src"), col("objValue").as("dst"))
       .distinct()
     val bySrc = Window.partitionBy(col("src"))
-    val nbrs = edges
+    val nbrs = Leaf(edges
       .withColumn("idx", row_number().over(bySrc.orderBy(col("dst"))).cast("long") - 1L)
       .withColumn("deg", count(lit(1)).over(bySrc))
-      .filter(col("deg") <= maxDegree)
-      .localCheckpoint(true) // read once per step
+      .filter(col("deg") <= maxDegree), eager = true) // read once per step
     // starts come from ALL edge sources, not the capped neighbor table:
     // a hub over maxDegree still gets its step-0 rows (its walks simply
     // cannot EXTEND — the same truncated-walk semantics as sinks), so
@@ -99,17 +98,16 @@ object GraphTrain {
     val parts = scala.collection.mutable.ArrayBuffer(
       frontier.withColumn("step", lit(0)))
     for (t <- 1 to steps) {
-      frontier = frontier.join(nbrs, col("node") === col("src"))
+      // O(1)-deep plan per level, like pathClosure; lazy (optimization
+      // r6) — the walk is a FIXED small step count with no per-level
+      // convergence action, so the caller's one action fills every level
+      // (each level frame serves its two consumers — next level + the
+      // union — from the same blocks)
+      frontier = Leaf(frontier.join(nbrs, col("node") === col("src"))
         .filter(col("idx") === pmod(
           col("w") * lit(2654435761L) + lit(t.toLong * 40503L) +
             length(col("node")) * 97L, col("deg")))
-        .select(col("start"), col("w"), col("dst").as("node"))
-        // O(1)-deep plan per level, like pathClosure; lazy (optimization
-        // r6) — the walk is a FIXED small step count with no per-level
-        // convergence action, so the caller's one action materializes
-        // every level (each level frame serves its two consumers — next
-        // level + the union — from the same blocks)
-        .localCheckpoint(false)
+        .select(col("start"), col("w"), col("dst").as("node")), eager = false)
       parts += frontier.withColumn("step", lit(t))
     }
     parts.reduce(_ unionByName _)
@@ -165,16 +163,15 @@ object GraphTrain {
   def negativeSamples(triples: DataFrame, ids: DataFrame, k: Int = 4): DataFrame = {
     require(k >= 1, "k must be >= 1")
     // the id table is read three ways (the size count, the subj-id probe,
-    // the neg_id resolve) — lazily checkpoint it so the count below
-    // materializes the blocks once instead of each consumer re-running
-    // the caller's id-assignment plan (optimization r6)
-    val idsCk = ids.localCheckpoint(false)
+    // the neg_id resolve) — a lazy leaf, so the count below fills the
+    // blocks once instead of each consumer re-running the caller's
+    // id-assignment plan (optimization r6)
+    val idsCk = Leaf(ids, eager = false)
     val n = idsCk.count()
     require(n > 0, "empty entity id table")
-    val edges = triples.filter(col("objKind").isin(0, 1))
+    val edges = Leaf(triples.filter(col("objKind").isin(0, 1))
       .select(col("subj"), col("pred"), col("objValue"))
-      .distinct()
-      .localCheckpoint(true) // read by the candidate build AND the anti-join
+      .distinct(), eager = true) // read by the candidate build AND the anti-join
     val cand = edges
       .join(idsCk.select(col("entity").as("subj"), col("id").as("sid")), Seq("subj"))
       .withColumn("i", explode(array((0 until k).map(lit): _*)))

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - names follow the q_* convention the bench/correctness tooling
   *    sorts and reports on;
   *  - sessions are built by the one factory, [[Sessions]];
+  *  - plans are cut by the one helper, `graftshim.Leaf`;
   *  - every top-level type in `src/main` is reachable: referenced from
   *    code, or a main. */
 class ContractSpec extends AnyFunSuite {
@@ -53,31 +54,45 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  /** Every `src/main` Scala file, by path under `src/main/scala`. */
+  private lazy val mainSources: Map[String, String] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
+    val st = Files.walk(root)
+    try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
+    finally st.close()
+  }
+
   /** Files allowed to build a session themselves: the factory, and the
     * measurement harness, which stays byte-identical. */
   private val sessionBuilders =
     Set("graft/Sessions.scala", "graft/Bench.scala", "graft/Verify.scala")
 
   test("only the session factory and the frozen harness build sessions") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
-    val st = Files.walk(root)
-    val builders =
-      try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
-        .filter(p => Files.readString(p).contains("SparkSession.builder"))
-        .map(p => root.relativize(p).toString).toSet
-      finally st.close()
+    val builders = mainSources.collect { case (p, text) if text.contains("SparkSession.builder") => p }.toSet
     assert(builders.contains("graft/Sessions.scala"))
     assert((builders -- sessionBuilders).isEmpty,
       s"hand-rolled SparkSession.builder outside graft.Sessions: ${(builders -- sessionBuilders).toSeq.sorted}")
   }
 
+  /** The one file allowed to checkpoint a frame: [[org.apache.spark.sql.graftshim.Leaf]]
+    * decides lazy against eager and keeps RDD checkpoints off the lazy
+    * path. */
+  private val checkpointer = "org/apache/spark/sql/graftshim/Leaf.scala"
+
+  test("only the plan-cut helper checkpoints a frame") {
+    val callers = mainSources.collect { case (p, text)
+      if Seq("localCheckpoint(", ".checkpoint(").exists(stripComments(text).contains) => p }.toSet
+    assert(callers == Set(checkpointer),
+      s"checkpoint calls outside graftshim.Leaf: ${(callers - checkpointer).toSeq.sorted}")
+  }
+
   /** Top-level types that nothing in `src/main` references and that
     * declare no main, each with the reason it stays. */
   private val unreachableKept = Map(
-    "BucketedStore" -> "subject-bucketed table IO that incremental adjacency may adopt",
     "DedupStream" -> "streaming product surface: callers start it with DedupStream.run",
     "DocumentLoader" -> "json-ld.net's remote-document loader, for callers that wire a transport",
     "JdkHttpTransport" -> "the network transport a deployment passes to DocumentLoader",
@@ -138,16 +153,7 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("every top-level type in src/main is referenced from code or declares a main") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root: $root missing")
-    val st = Files.walk(root)
-    val sources =
-      try st.iterator.asScala.filter(_.toString.endsWith(".scala"))
-        .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
-      finally st.close()
-    val found = unreachable(sources)
+    val found = unreachable(mainSources)
     assert((found -- unreachableKept.keySet).isEmpty,
       s"unreferenced top-level types without a main: ${(found -- unreachableKept.keySet).toSeq.sorted}")
     assert((unreachableKept.keySet -- found).isEmpty,

@@ -7,7 +7,8 @@ import graft.pipeline.SparkTestBase
   * is repartitioned up to the smaller of the session's shuffle
   * parallelism and its default parallelism, an already-parallel input
   * passes through untouched (the production multi-file shape must not pay
-  * an exchange), and row content is preserved either way. */
+  * an exchange), row content is preserved either way, and an input that
+  * still holds a shuffle is refused. */
 class SpreadSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -35,6 +36,16 @@ class SpreadSpec extends AnyFunSuite {
     val in = rows.toDF("doc_id", "text").repartition(target + 1).localCheckpoint(true)
     val out = Spread.minParallel(in, "doc_id")
     assert(out eq in, "a sufficiently-parallel frame must pass through as-is")
+  }
+
+  test("a shuffled input is refused; the same rows behind a Leaf are spread") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.max
+    val shuffled = rows.toDF("doc_id", "text").groupBy("doc_id").agg(max("text").as("text"))
+    val e = intercept[IllegalArgumentException](Spread.minParallel(shuffled, "doc_id"))
+    assert(e.getMessage.contains("a file read or a Leaf"), e.getMessage)
+    val leaf = org.apache.spark.sql.graftshim.Leaf(shuffled.coalesce(1), eager = false)
+    assert(content(Spread.minParallel(leaf, "doc_id")) === rows)
   }
 
   test("many tiny files that scan as fewer splits than the target are spread") {

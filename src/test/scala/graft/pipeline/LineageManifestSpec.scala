@@ -2,10 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -196,36 +194,13 @@ class LineageManifestSpec extends AnyFunSuite {
     }
   }
 
-  /** Descriptions of the jobs `body` starts. A marker job flushes the
-    * listener queue: events reach a listener in order. */
-  private def jobDescriptions(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val marker = "lineage-spec-marker"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "listener never saw the marker job")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSeq.filter(_ != marker)
-  }
-
   test("reading a 64-bucket manifest and deciding a resume lists no directories in a job") {
     val dir = tmp("lineage-jobs")
     val us = urls(1000)
     run(dir, us)
     assert(manifest(dir).size == Lineage.Buckets)
     val listing = (d: String) => d.startsWith("Listing leaf files and directories")
-    val jobs = jobDescriptions {
+    val jobs = SparkTestBase.jobDescriptions {
       Lineage.pendingPages(pages(us), Lineage.readManifest(spark, s"$dir/lineage")).count()
     }
     assert(jobs.nonEmpty, "the resume decision runs at least its fingerprint job")
@@ -233,14 +208,14 @@ class LineageManifestSpec extends AnyFunSuite {
     // the detector sees the listing job the partitioned layout starts
     val legacy = s"$dir/legacy"
     Lineage.readManifest(spark, s"$dir/lineage").toDF().write.partitionBy("partition_key").parquet(legacy)
-    assert(jobDescriptions(Lineage.readManifest(spark, legacy)).exists(listing))
+    assert(SparkTestBase.jobDescriptions(Lineage.readManifest(spark, legacy)).exists(listing))
   }
 
   test("reading a 64-bucket snapshot is one job") {
     val dir = tmp("lineage-one-job")
     run(dir, urls(1000))
     var rows = Seq.empty[LineageRow]
-    val jobs = jobDescriptions { rows = Lineage.readManifest(spark, s"$dir/lineage") }
+    val jobs = SparkTestBase.jobDescriptions { rows = Lineage.readManifest(spark, s"$dir/lineage") }
     assert(rows.size == Lineage.Buckets)
     assert(jobs.size == 1, s"jobs: $jobs")
     assert(!jobs.exists(_.startsWith("Listing leaf files and directories")), s"jobs: $jobs")

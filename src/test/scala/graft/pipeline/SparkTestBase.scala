@@ -20,6 +20,29 @@ object SparkTestBase {
     s
   }
 
+  /** Descriptions of the jobs `body` starts. A marker job flushes the
+    * listener queue: events reach a listener in order. */
+  def jobDescriptions(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = "spark-test-base-marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq.filter(_ != marker)
+  }
+
   /** A page whose html holds each payload in its own script block. */
   def page(url: String, payloads: String*): Page =
     Page(url, new java.sql.Timestamp(0L),
@@ -31,8 +54,9 @@ object SparkTestBase {
   * thread waits for one that the scheduler has not started) and no task
   * has finished for the limit, it prints every thread's stack with its
   * locks to stderr and halts the JVM with exit code 3, so a deadlock such
-  * as the lazy-checkpoint one in `GraphMaterialize.frameByType` fails the
-  * run in minutes rather than at the CI timeout. It also ends the sbt that
+  * as the one a lazy `localCheckpoint` could hit when a broadcast first
+  * read it (`graftshim.Leaf` describes it; no lazy path creates an RDD
+  * checkpoint now) fails the run in minutes rather than at the CI timeout. It also ends the sbt that
   * forked this JVM: ScalaTest's sbt-side runner waits forever for the end
   * of a forked run that stopped without reporting one. */
 object StallWatchdog extends SparkListener {
