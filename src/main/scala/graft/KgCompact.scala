@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Downstream compaction: globally deduplicate the triples table across
-  * lineage partitions (KgRun/KgStream dedup only WITHIN a partition /
-  * micro-batch — a triple observed on two hosts, e.g. the same event IRI
-  * embedded on many pages, exists once per partition until compacted).
+  * lineage partitions (KgRun dedups only WITHIN a partition — a triple
+  * observed on two hosts, e.g. the same event IRI embedded on many
+  * pages, exists once per partition until compacted).
   *
   * Shape at 100 TB: one hash-aggregate shuffle keyed on the full triple
   * (map-side partial combine eliminates most duplicates before the

@@ -67,7 +67,6 @@ final case class JsonLdOptions(
     var base: String = "",
     var compactArrays: Boolean = true,
     var expandContext: JV = null,
-    var processingMode: String = "json-ld-1.0",
     var embed: Option[Boolean] = None,
     var explicit: Option[Boolean] = None,
     var omitDefault: Option[Boolean] = None,
@@ -78,7 +77,6 @@ final case class JsonLdOptions(
     var sortGraphNodesFromRdf: Boolean = true,
     var format: String = null,
     var useNamespaces: Boolean = false,
-    var outputForm: String = null,
     /** Work budget for normalization's permutation search, in SJT steps
       * per document (not in the reference — SURVEY.md §4.3 / §7.4 risk 3:
       * a symmetric blank-node clique makes the search exponential and

@@ -151,36 +151,18 @@ object JsonLdProcessor {
     rval
   }
 
-  /** Pluggable RDF parser registry (Core/JsonLdProcessor.cs:284-315, S5):
-    * format string -> serialized-input parser. N-Quads registered by
-    * default; users add formats with registerRdfParser. */
-  private val rdfParsers =
-    scala.collection.concurrent.TrieMap[String, String => RdfDataset](
-      "application/nquads" -> (s => NQuads.parseNQuads(s)),
-      // Core/JsonLdProcessor.cs:291 registers TurtleRDFParser by default
-      "text/turtle" -> (s => Turtle.parse(s)))
-
-  def registerRdfParser(format: String, parser: String => RdfDataset): Unit =
-    rdfParsers.put(format, parser)
-
-  /** Core/JsonLdProcessor.cs:326-395. */
+  /** Core/JsonLdProcessor.cs:326-395, with the reference's two default
+    * parsers (N-Quads, and Turtle as registered at
+    * Core/JsonLdProcessor.cs:291); any other format is `UnknownFormat`. */
   def fromRDF(dataset: JV, options: JsonLdOptions): JV = {
     if (options.format == null && dataset.isInstanceOf[JStr])
       options.format = "application/nquads"
-    rdfParsers.get(options.format) match {
-      case Some(parser) => fromRDFDataset(parser(asString(dataset)), options)
-      case None         => throw new JsonLdError(JsonLdError.UnknownFormat, options.format)
+    val parsed = options.format match {
+      case "application/nquads" => NQuads.parseNQuads(asString(dataset))
+      case "text/turtle"        => Turtle.parse(asString(dataset))
+      case other                => throw new JsonLdError(JsonLdError.UnknownFormat, other)
     }
-  }
-
-  def fromRDFDataset(dataset: RdfDataset, options: JsonLdOptions): JV = {
-    val rval = new JsonLdApi(options).fromRDF(dataset)
-    if (options.outputForm != null) options.outputForm match {
-      case "expanded"  => rval
-      case "compacted" => compact(rval, new JObj, options)
-      case "flattened" => flatten(rval, new JObj, options)
-      case _           => throw new JsonLdError(JsonLdError.UnknownError)
-    } else rval
+    new JsonLdApi(options).fromRDF(parsed)
   }
 
   /** Core/JsonLdProcessor.cs:407-457. Returns Left(nquads) when

@@ -105,21 +105,16 @@ object DedupOps {
   val DefaultMaxBucket = 4096
 
   /** Over-full (band, bucket) keys. KEYS-ONLY by design: the count agg
-    * prunes to (band, bucket) [+ doc_id when `distinctDocs`] — 16-byte
-    * shuffle rows, never the 512-byte signatures (the first cut of the
-    * guard ran min_by(sig) here and shuffled the whole signature
-    * column; with near-unique buckets partial agg doesn't reduce that).
-    * Only over-full buckets survive the filter, so the result is tiny
-    * and AQE broadcasts the joins against it. `distinctDocs` counts
-    * distinct doc_ids instead of rows — needed when the input can carry
-    * several sketches per doc (re-crawled ids in a corpus sketch table
-    * with compaction deferred), where raw row counts would flip a
-    * few-doc bucket hot and needlessly degrade it. */
-  private[ops] def hotBucketKeys(rows: DataFrame, maxBucket: Int,
-                                 distinctDocs: Boolean): DataFrame = {
+    * prunes to (band, bucket) — 16-byte shuffle rows, never the 512-byte
+    * signatures (the first cut of the guard ran min_by(sig) here and
+    * shuffled the whole signature column; with near-unique buckets
+    * partial agg doesn't reduce that). Only over-full buckets survive
+    * the filter, so the result is tiny and AQE broadcasts the joins
+    * against it. Every caller passes one row per doc per (band, bucket),
+    * so the row count is the bucket's doc count. */
+  private[ops] def hotBucketKeys(rows: DataFrame, maxBucket: Int): DataFrame = {
     require(maxBucket >= 2, s"maxBucket=$maxBucket must be >= 2")
-    val n = if (distinctDocs) countDistinct(col("doc_id")) else count(lit(1))
-    rows.groupBy("band", "bucket").agg(n.as("n"))
+    rows.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBucket).select(col("band"), col("bucket"))
   }
 
@@ -192,7 +187,7 @@ object DedupOps {
     // common case, where the frame is EMPTY). Checkpoint the tiny
     // result once; its materialized stats also let AQE collapse every
     // hot-side join to an empty relation without scanning `rows`.
-    val hotKeys = Leaf(hotBucketKeys(rows, maxBucket, distinctDocs = false), eager = true)
+    val hotKeys = Leaf(hotBucketKeys(rows, maxBucket), eager = true)
     val coldPairs = selfPairs(rows.join(hotKeys, Seq("band", "bucket"), "left_anti"))
     // cold-corpus early exit (optimization r6): hotKeys is already
     // materialized, so emptiness is a bounded read of its cached blocks.
@@ -210,7 +205,7 @@ object DedupOps {
     // branches; materialize it once instead of re-running the family agg
     val famRows = Leaf(fams.select(col("band"), col("bucket"),
       col("rep.doc_id").as("doc_id"), col("rep.pl").as("pl")), eager = true)
-    val famHotKeys = hotBucketKeys(famRows, maxBucket, distinctDocs = false)
+    val famHotKeys = hotBucketKeys(famRows, maxBucket)
     val famColdPairs = selfPairs(famRows.join(famHotKeys, Seq("band", "bucket"), "left_anti"))
     val famHotRows = famRows.join(famHotKeys, Seq("band", "bucket"))
     val famStarPairs = starsThrough(famHotRows,
@@ -486,13 +481,12 @@ object DedupOps {
 
   // ---------------- incremental (append-mode) near-dup maintenance ----
 
-  /** Append-mode near-dup update (VERDICT r3 #9, the streaming skin's
-    * batch companion): sketch ONLY the `newDocs` batch, candidate-join it
-    * against the PERSISTED signature table (new×old) and itself (new×new),
-    * and return the updated (sketches, pairs) artifacts. Never re-sketches
-    * the existing corpus — per batch the cost is
-    * O(|new| + |new×old candidates|), the shape an hourly crawl append
-    * needs at 100 TB.
+  /** Append-mode near-dup update (VERDICT r3 #9): sketch ONLY the
+    * `newDocs` batch, candidate-join it against the PERSISTED signature
+    * table (new×old) and itself (new×new), and return the updated
+    * (sketches, pairs) artifacts. Never re-sketches the existing corpus —
+    * per batch the cost is O(|new| + |new×old candidates|), the shape an
+    * hourly crawl append needs at 100 TB.
     *
     * Exactness: a full rebuild's LSH candidates split into old×old
     * (already in `existingPairs`), new×old, and new×new — the latter two
@@ -504,79 +498,40 @@ object DedupOps {
     * component-linked through representatives: the rebuild uses the
     * two-level family guard ([[familyGuardedPairs]] — family stars at
     * estimate 1.0 plus rep-level pairs), while this incremental path
-    * keeps a flat per-side rep cap on the new×old probe (see capSide
-    * below; the caps also see per-batch vs whole-corpus occupancy).
-    * Assumes new doc_ids are disjoint from existing ones (append
-    * semantics). */
+    * keeps a flat per-side rep cap on the new×old probe (see
+    * [[incrementalPairsFromSketches]]; the caps also see per-batch vs
+    * whole-corpus occupancy). Assumes new doc_ids are disjoint from
+    * existing ones (append semantics). */
   def incrementalMinhashNearDups(existingSketches: DataFrame, existingPairs: DataFrame,
                                  newDocs: DataFrame, k: Int = 64, bands: Int = 16,
                                  threshold: Double = 0.5,
                                  maxBucket: Int = DefaultMaxBucket): (DataFrame, DataFrame) = {
-    val (newSk, newPairs) =
-      incrementalMinhashDelta(existingSketches, newDocs, k, bands, threshold, maxBucket)
-    (existingSketches.select("doc_id", "sig", "band_buckets").unionByName(newSk),
-      existingPairs.select(col("a"), col("b"), col("jaccard_est")).unionByName(newPairs))
-  }
-
-  /** The delta form of [[incrementalMinhashNearDups]]: returns ONLY the
-    * new batch's (sketches, pairs) — what an append-mode sink persists
-    * per batch (graft.streaming.DedupStream writes each delta to a
-    * batchId-scoped directory so replays stay idempotent). */
-  def incrementalMinhashDelta(existingSketches: DataFrame, newDocs: DataFrame,
-                              k: Int = 64, bands: Int = 16,
-                              threshold: Double = 0.5,
-                              maxBucket: Int = DefaultMaxBucket): (DataFrame, DataFrame) = {
     val newSk = sketches(newDocs, k, bands).select("doc_id", "sig", "band_buckets")
-    (newSk, incrementalPairsFromSketches(existingSketches, newSk, k, threshold, maxBucket))
+    (existingSketches.select("doc_id", "sig", "band_buckets").unionByName(newSk),
+      existingPairs.select(col("a"), col("b"), col("jaccard_est")).unionByName(
+        incrementalPairsFromSketches(existingSketches, newSk, k, threshold, maxBucket)))
   }
 
   /** New-batch pair generation against a persisted signature table, both
-    * sides ALREADY sketched (callers that persist/cache the new sketches
-    * — DedupStream — use this so the document tokenize+minhash pass runs
-    * exactly once per batch, not once per downstream action). A doc_id
-    * that recurs across batches (a re-crawl) never self-pairs (the x=y
-    * guard), but its older sketch stays in the table — replacing
-    * superseded sketches is a compaction concern, documented at the
-    * caller. When the old side carries a `batch` column and a re-crawled
-    * corpus doc therefore has several sketches, the estimate for a pair
-    * is taken from the LATEST old sketch (max_by over batch on the
-    * candidate set only — no extra shuffle over the corpus table), so
-    * the result is deterministic instead of whichever duplicate a
-    * dropDuplicates happened to keep (review r4b); the remaining tie —
-    * BOTH docs of a pair re-crawled in the same batch pair, giving two
-    * latest rows with opposite new/old roles — breaks deterministically
-    * toward the row whose new-side doc is the pair minimum (review r4c).
-    * `maxBucket` should match the value used for the corpus pair table;
-    * the caps are per-path, so differing values make incremental and
-    * rebuild outputs diverge on buckets between them. */
+    * sides ALREADY sketched (doc_id, sig, band_buckets), one sketch per
+    * doc and new doc_ids disjoint from the old ones, as for
+    * [[incrementalMinhashNearDups]]. `maxBucket` should match the value
+    * used for the corpus pair table; the caps are per-path, so differing
+    * values make incremental and rebuild outputs diverge on buckets
+    * between them. */
   def incrementalPairsFromSketches(existingSketches: DataFrame, newSketches: DataFrame,
                                    k: Int = 64, threshold: Double = 0.5,
                                    maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val oldWithBatch =
-      if (existingSketches.columns.contains("batch"))
-        existingSketches.select(col("doc_id"), col("sig"), col("band_buckets"),
-          col("batch").cast("long").as("obatch"))
-      else
-        existingSketches.select(col("doc_id"), col("sig"), col("band_buckets"),
-          lit(0L).as("obatch"))
-    def buckets(df: DataFrame) = df.select(col("doc_id"), col("sig"), col("obatch"),
+    def buckets(df: DataFrame) = df.select(col("doc_id"), col("sig"),
       posexplode(col("band_buckets")).as(Seq("band", "bucket")))
-    // The guard references each side from several branches; checkpoint
-    // the NEW side (bounded: one batch) so an uncached caller frame is
-    // sketched once — unless the caller already persisted it
-    // (DedupStream caches the batch sketches; copying them again would
-    // leave per-micro-batch checkpoint blocks pending driver GC). The
+    // The guard references each side from several branches; cut the NEW
+    // side (bounded: one batch) so a caller frame is sketched once. The
     // old side is re-evaluated per branch instead — at scale it is a
     // persisted sketch table whose re-scan is cheap, and copying the
     // whole corpus table per batch would not be.
-    val newSide =
-      if (newSketches.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        Leaf(newSketches.select(col("doc_id"), col("sig"), col("band_buckets")), eager = true)
-      else newSketches.select(col("doc_id"), col("sig"), col("band_buckets"))
-    val nb = buckets(newSide
-      // the new batch supersedes every persisted sketch by definition
-      .withColumn("obatch", lit(Long.MaxValue)))
-    val ob = buckets(oldWithBatch)
+    val nb = buckets(
+      Leaf(newSketches.select(col("doc_id"), col("sig"), col("band_buckets")), eager = true))
+    val ob = buckets(existingSketches)
     // HOT-BUCKET GUARD, incremental form (same occupancy bound as the
     // batch path, but a FLAT per-side rep cap rather than the two-level
     // family guard — minhash band buckets certify near-identity, so a
@@ -590,81 +545,41 @@ object DedupOps {
     // representative, so rep↔otherSide edges connect the families —
     // recall is only guaranteed for members whose estimate against the
     // rep passes the threshold (cf. the degradation note on
-    // [[familyGuardedPairs]]). The representative is the min doc_id —
-    // for the old side with its LATEST sketch, matching latest-wins
-    // below.
+    // [[familyGuardedPairs]]). The representative is the min doc_id.
     def capSide(side: DataFrame): DataFrame = {
-      // occupancy by DISTINCT doc ([[hotBucketKeys]]): stale sketches of
-      // re-crawled ids must not flip a few-doc bucket hot — the B² the
-      // cap bounds is in distinct docs, and the latest-wins agg below
-      // already collapses duplicate pairs
-      val hotKeys = hotBucketKeys(side, maxBucket, distinctDocs = true)
+      val hotKeys = hotBucketKeys(side, maxBucket)
       val kept = side.join(hotKeys, Seq("band", "bucket"), "left_anti")
-        .select(col("band"), col("bucket"), col("doc_id"), col("sig"), col("obatch"))
+        .select(col("band"), col("bucket"), col("doc_id"), col("sig"))
       val reps = side.join(hotKeys, Seq("band", "bucket"))
         .groupBy("band", "bucket")
-        .agg(min_by(struct(col("doc_id"), col("sig"), col("obatch")),
-          struct(col("doc_id"), (-col("obatch")).as("nb"))).as("rep"))
+        .agg(min_by(struct(col("doc_id"), col("sig")), col("doc_id")).as("rep"))
         .select(col("band"), col("bucket"), col("rep.doc_id").as("doc_id"),
-          col("rep.sig").as("sig"), col("rep.obatch").as("obatch"))
+          col("rep.sig").as("sig"))
       kept.unionByName(reps)
     }
     val nx = capSide(nb).select(col("band"), col("bucket"), col("doc_id").as("x"), col("sig").as("sx"))
     // new×new goes through the batch guard (star edges for hot buckets)
     val newNew = boundedBucketPairs(
       nb.select(col("doc_id"), col("sig"), col("band"), col("bucket")), maxBucket)
-      .select(col("a").as("x"), col("b").as("y"),
-        col("siga").as("sx"), col("sigb").as("sy"), lit(Long.MaxValue).as("obatch"))
+      .select(col("a").as("x"), col("b").as("y"), col("siga").as("sx"), col("sigb").as("sy"))
     val newOld = nx.join(
-      capSide(ob).select(col("band"), col("bucket"), col("doc_id").as("y"), col("sig").as("sy"),
-        col("obatch")),
+      capSide(ob).select(col("band"), col("bucket"), col("doc_id").as("y"), col("sig").as("sy")),
       Seq("band", "bucket"))
-      // a re-crawled doc_id meets its own earlier sketch here — that is
-      // the same document, not a near-duplicate pair (review r4)
+      // a doc_id present on both sides is one document, not a
+      // near-duplicate pair
       .filter(col("x") =!= col("y"))
-      .select(col("x"), col("y"), col("sx"), col("sy"), col("obatch"))
+      .select(col("x"), col("y"), col("sx"), col("sy"))
     // the signature agreement estimate is symmetric, so orienting the pair
-    // as (min, max) after the join needs no sig re-alignment
+    // as (min, max) after the join needs no sig re-alignment; the rows of
+    // one pair (one per shared band) carry the same two signatures
     newNew.unionByName(newOld)
       .select(least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"),
-        col("sx"), col("sy"), col("obatch"),
-        // obatch tie-break: when BOTH docs of a pair are in the new
-        // batch and each also matches the other's old sketch, the two
-        // newOld rows carry opposite (new, old) sig pairings at the
-        // same obatch — prefer the row whose new-side doc (x) is the
-        // pair minimum, so the chosen estimate is run-independent
-        when(col("x") < col("y"), lit(1)).otherwise(lit(0)).as("tie"))
-      .groupBy(col("a"), col("b"))
-      .agg(max_by(struct(col("sx"), col("sy")), struct(col("obatch"), col("tie"))).as("s"))
-      .select(col("a"), col("b"), col("s.sx").as("sx"), col("s.sy").as("sy"))
+        col("sx"), col("sy"))
+      .dropDuplicates("a", "b")
       .withColumn("jaccard_est", jaccardEstimate(col("sx"), col("sy"), k))
       .filter(col("jaccard_est") >= threshold)
       .select(col("a"), col("b"), col("jaccard_est"))
   }
-
-  /** Latest sketch per document from a batch-stamped sketch table
-    * (doc_id, sig, band_buckets, batch) — the COMPACTION operator for the
-    * append-mode tables [[incrementalPairsFromSketches]] reads: re-crawled
-    * docs leave one superseded sketch per crawl, which grows the table and
-    * widens every candidate join forever. One shuffle on doc_id (max_by
-    * over batch; partial agg collapses duplicates map-side). Precondition:
-    * (doc_id, batch) is unique — true for DedupStream's batch writes —
-    * otherwise the within-batch winner is unspecified.
-    *
-    * Semantics note: compacting is not a no-op on pair OUTPUT — stale
-    * sketches can discover candidates the current version's buckets
-    * would not (their estimate is still scored latest-wins). Dropping
-    * them is the point: a near-dup of a SUPERSEDED version is not a
-    * near-dup of the current document, and pairing against a compacted
-    * table equals pairing against a fresh rebuild of current texts
-    * (DedupStreamSpec asserts exactly that). */
-  def latestSketches(sketchTable: DataFrame): DataFrame =
-    sketchTable
-      .select(col("doc_id"), col("sig"), col("band_buckets"), col("batch").cast("long").as("batch"))
-      .groupBy(col("doc_id"))
-      .agg(max_by(struct(col("sig"), col("band_buckets"), col("batch")), col("batch")).as("r"))
-      .select(col("doc_id"), col("r.sig").as("sig"),
-        col("r.band_buckets").as("band_buckets"), col("r.batch").as("batch"))
 
   // ---------------- near-dup cluster resolution ----------------
 

@@ -176,12 +176,9 @@ object TextOps {
     val c2 = Leaf(biKeys.groupBy("h1", "h2").agg(count(lit(1)).as("pair_n"),
       min(col("p1")).as("p1"), min(col("p2")).as("p2"),
       min(col("s1")).as("s1"), min(col("s2")).as("s2")), eager = false)
-    val totN = c2.agg(sum(col("pair_n"))).first().getLong(0)
-    val lgN = {
-      val il = 63 - java.lang.Long.numberOfLeadingZeros(totN)
-      val frac = if (il >= 10) totN >> (il - 10) else totN << (10 - il)
-      il.toLong * 1024L + frac - 1024L
-    }
+    val totRow = c2.agg(sum(col("pair_n"))).first()
+    // with no bigrams the sum is null and there is no row to score
+    val lgN = if (totRow.isNullAt(0)) 0L else CurationOps.lgL(totRow.getLong(0))
     val uni = toks.select(explode(col("w")).as("t"))
       .select(keyed(col("t"), ("u1", "u2")): _*)
       .groupBy("u1", "u2").agg(count(lit(1)).as("uni_n"))

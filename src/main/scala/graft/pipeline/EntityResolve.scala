@@ -19,30 +19,16 @@ import org.apache.spark.sql.graftshim.Leaf
   *
   * Scale discipline (the same lesson as the LSH family guard): a block
   * of B entities yields B²/2 pairs, so blocks larger than `maxBlock`
-  * (boilerplate names — "home", "untitled") are EXCLUDED, loudly
-  * countable from the returned `dropped_blocks` companion via
-  * [[blockStats]]. Every exchange carries ids, keys and counts only;
-  * the attribute-set join is keyed by (entity) then (pred, value) —
-  * co-locatable, partial-agg friendly. Threshold compares in integer
+  * (boilerplate names — "home", "untitled") are EXCLUDED. Every
+  * exchange carries ids, keys and counts only; the attribute-set join
+  * is keyed by (entity) then (pred, value) — co-locatable, partial-agg
+  * friendly. Threshold compares in integer
   * arithmetic (shared·den ≥ union·num), so the cut is exact — no float
   * boundary drift between engines.
   */
 object EntityResolve {
 
   val NamePred = "http://schema.org/name"
-
-  /** Block occupancy over the blocking key — the observability half of
-    * the maxBlock cap (how many blocks, how big, how many dropped). */
-  def blockStats(triples: DataFrame, maxBlock: Int = 64,
-      namePred: String = NamePred): DataFrame =
-    triples.filter(col("pred") === namePred && col("objKind") === 2)
-      .select(col("subj").as("entity"), lower(col("objValue")).as("block"))
-      .distinct()
-      .groupBy(col("block")).agg(count(lit(1)).as("bn"))
-      .withColumn("status",
-        when(col("bn") === 1, "singleton")
-          .when(col("bn") <= maxBlock, "paired")
-          .otherwise("dropped"))
 
   /** Discovered equivalence pairs (a < b) with attribute-overlap
     * evidence: `shared` = common literal attributes, `jaccard` =

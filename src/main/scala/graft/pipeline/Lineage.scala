@@ -23,9 +23,7 @@ import java.sql.Timestamp
   * parquet file into the hidden `_staging` directory, renames it to the
   * next snapshot number and only then deletes older snapshots, so a
   * crash at any step leaves either the old or the new snapshot readable.
-  * A directory in the older layout (one `partition_key=hbN/` directory
-  * per bucket) still reads, and the next publish replaces it. The
-  * manifest directory is owned by this object: a publish deletes
+  * The manifest directory is owned by this object: a publish deletes
   * everything else in it.
   * A real deployment swaps these methods for an Iceberg catalog without
   * touching the engine.
@@ -56,7 +54,7 @@ object Lineage {
     * acceptable here: it runs once per page row on the lineage path, not
     * in the triple-emission hot loop, and guarantees bit-identical keys
     * between the DataFrame and typed paths. */
-  def partitionKeyCol: Column = hostBucketUdf(col("url"))
+  private[pipeline] def partitionKeyCol: Column = hostBucketUdf(col("url"))
 
   /** Fingerprint of the input slice belonging to each `partition_key` of
     * `df`, collected by one aggregate job — order-independent (xor of
@@ -81,18 +79,18 @@ object Lineage {
 
   private val ManifestEncoder = Encoders.product[LineageRow]
 
-  /** Load the lineage manifest as driver rows: the newest snapshot, or a
-    * directory in the older partitioned layout. A MISSING manifest is the
-    * normal first-run state and yields no rows, as does a directory
-    * holding only the staging directory of a first publish that crashed
-    * before its rename. A manifest that EXISTS but cannot be read fails
-    * loudly instead of silently falling back to empty (which would
-    * quietly schedule a full re-run — at 100 TB an expensive surprise an
-    * operator must opt into by deleting the manifest; VERDICT r4 #4):
-    * garbage bytes, an empty directory, more than [[Buckets]] rows, a
-    * missing column (it reads as null) or a mistyped one. The source is
-    * read with the `LineageRow` schema given, so a read is one bounded
-    * collect and no schema-inference job. */
+  /** Load the lineage manifest as driver rows: the newest snapshot. A
+    * MISSING manifest is the normal first-run state and yields no rows,
+    * as does a directory holding only the staging directory of a first
+    * publish that crashed before its rename. A manifest that EXISTS but
+    * cannot be read fails loudly instead of silently falling back to
+    * empty (which would quietly schedule a full re-run — at 100 TB an
+    * expensive surprise an operator must opt into by deleting the
+    * manifest; VERDICT r4 #4): garbage bytes, a directory with no
+    * snapshot (empty, or holding anything but `_staging`), more than
+    * [[Buckets]] rows, a missing column (it reads as null) or a mistyped
+    * one. The snapshot is read with the `LineageRow` schema given, so a
+    * read is one bounded collect and no schema-inference job. */
   def readManifest(spark: SparkSession, manifestPath: String): Seq[LineageRow] = {
     val dir = new Path(manifestPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -101,15 +99,10 @@ object Lineage {
         if (!fs.exists(dir)) None
         else {
           val entries = fs.listStatus(dir).toSeq
-          val names = entries.map(_.getPath.getName)
           snapshots(entries).maxByOption(_._1).map(_._2.toString).orElse {
-            if (names.nonEmpty && names.forall(_ == StagingDir)) None
-            else {
-              // given a schema, Spark reads a directory without data files as zero rows
-              require(names.exists(n => !n.startsWith("_") && !n.startsWith(".")),
-                "no snapshot and no data files")
-              Some(manifestPath)
-            }
+            require(entries.nonEmpty && entries.forall(_.getPath.getName == StagingDir),
+              "no snapshot")
+            None
           }
         }
       source.fold(Seq.empty[LineageRow]) { src =>
@@ -177,7 +170,7 @@ object Lineage {
   /** Publish `rows` as the complete manifest: write them as one parquet
     * file into the staging directory, rename it to the next snapshot
     * number, then delete everything else in the manifest directory (older
-    * snapshots, an older partitioned layout, the staging directory). The
+    * snapshots, the staging directory). The
     * writer's output path is the staging directory, so Spark never
     * refreshes a cached plan over the manifest path. `step` is called
     * after the "staged" and "renamed" steps; a spec throws from it to

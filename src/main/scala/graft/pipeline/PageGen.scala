@@ -38,13 +38,8 @@ object PageGen {
 
   private val Langs = Vector("en", "de", "fr", "es", "pt", "it", "nl", "ja")
 
-  /** SplitMix64 — deterministic per-row RNG stream. */
-  @inline def mix64(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
+  /** SplitMix64 — deterministic per-row RNG stream ([[graft.ops.TextHash.mix64]]). */
+  @inline def mix64(z0: Long): Long = graft.ops.TextHash.mix64(z0)
 
   /** Approximate Zipf(s≈1.1) rank over `n` hosts via inverse-CDF on a
     * uniform draw; rank 0 is the hottest host. */

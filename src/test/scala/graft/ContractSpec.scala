@@ -93,10 +93,8 @@ class ContractSpec extends AnyFunSuite {
   /** Top-level types that nothing in `src/main` references and that
     * declare no main, each with the reason it stays. */
   private val unreachableKept = Map(
-    "DedupStream" -> "streaming product surface: callers start it with DedupStream.run",
     "DocumentLoader" -> "json-ld.net's remote-document loader, for callers that wire a transport",
-    "JdkHttpTransport" -> "the network transport a deployment passes to DocumentLoader",
-    "KgStream" -> "streaming product surface: callers start it with KgStream.run")
+    "JdkHttpTransport" -> "the network transport a deployment passes to DocumentLoader")
 
   /** Scala source with its comments blanked out. Newlines stay, so line
     * starts stay; string and character literals stay too, so a `//` in a

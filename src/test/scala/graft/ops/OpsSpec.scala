@@ -291,25 +291,6 @@ class OpsSpec extends AnyFunSuite {
     assert(comps.values.toSet == Set(1L) && comps.keySet == (1L to 6L).toSet + 20L + 21L, comps)
   }
 
-  test("incremental guard counts distinct docs, not stale re-crawl sketch rows") {
-    // doc 1 re-crawled 6 times (compaction deferred): 6 sketch rows but
-    // only 2 distinct docs per bucket — the bucket must NOT go hot at
-    // cap 4, so the new doc pairs with BOTH old docs, not just a rep.
-    val text = "identical boilerplate page body repeated across the whole crawl frontier"
-    val sk1 = DedupOps.sketches(Seq((1L, text)).toDF("doc_id", "text"), 16, 16)
-      .select("doc_id", "sig", "band_buckets")
-    val staleOld = (0L to 5L).map(b => sk1.withColumn("batch", lit(b)))
-      .reduce(_ unionByName _)
-    val sk2 = DedupOps.sketches(Seq((2L, text)).toDF("doc_id", "text"), 16, 16)
-      .select("doc_id", "sig", "band_buckets").withColumn("batch", lit(0L))
-    val newSk = DedupOps.sketches(Seq((20L, text)).toDF("doc_id", "text"), 16, 16)
-      .select("doc_id", "sig", "band_buckets")
-    val pairs = DedupOps.incrementalPairsFromSketches(
-      staleOld.unionByName(sk2), newSk, k = 16, threshold = 0.25, maxBucket = 4)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 20L), (2L, 20L)), pairs)
-  }
-
   test("incremental near-dups: appending a batch equals a full rebuild") {
     // corpus with cross-batch near-dups: 20 is a near-dup of 10 (old),
     // 21 duplicates 20 (new x new), 22 is unrelated

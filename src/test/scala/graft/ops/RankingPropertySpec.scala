@@ -134,5 +134,7 @@ class RankingPropertySpec extends AnyFunSuite {
       // the planted collocation must surface at rank 1
       assert(got.head._2 == "aa" && got.head._3 == "bb", s"seed=$seed planted pair")
     }
+    // a corpus with no bigrams has no collocations
+    assert(TextOps.pmiCollocations(Seq((0L, "single"), (1L, "")).toDF("doc_id", "text")).isEmpty)
   }
 }

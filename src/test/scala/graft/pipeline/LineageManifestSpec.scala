@@ -8,8 +8,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The lineage manifest as one snapshot file: crash safety of the
-  * publish, the older partitioned layout, what a publish leaves on disk,
-  * the caller's cached frames across a publish, and the jobs a resume
+  * publish, what a publish leaves on disk, what fails to read, the
+  * caller's cached frames across a publish, and the jobs a resume
   * decision starts. */
 class LineageManifestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -48,7 +48,7 @@ class LineageManifestSpec extends AnyFunSuite {
     entries(dir).filter(_.matches("""snapshot-\d+\.parquet"""))
 
   /** Exactly one snapshot and its checksum: no staging directory, no
-    * older layout, no orphan `.crc` file. */
+    * orphan `.crc` file. */
   private def assertOneSnapshot(dir: String): Unit = {
     val snap = snapshots(dir)
     assert(snap.size == 1, s"expected one snapshot, found ${entries(dir)}")
@@ -101,28 +101,6 @@ class LineageManifestSpec extends AnyFunSuite {
     assertOneSnapshot(dir)
   }
 
-  test("a manifest in the partitioned layout reads back identically and the next publish replaces it") {
-    val dir = tmp("lineage-legacy")
-    val v1 = urls(1000)
-    run(dir, v1)
-    val rows = manifest(dir)
-    assert(rows.map(_.partition_key).size == Lineage.Buckets)
-    // rewrite it the way the partitioned publish wrote it
-    val legacy = tmp("lineage-legacy-copy")
-    Files.move(Paths.get(dir, "triples"), Paths.get(legacy, "triples"))
-    rows.toSeq.toDF().write.partitionBy("partition_key").parquet(s"$legacy/lineage")
-    assert(entries(legacy).count(_.startsWith("partition_key=")) == Lineage.Buckets)
-    assert(manifest(legacy) == rows)
-    assert(pendingKeys(legacy, v1).isEmpty)
-    val v2 = v1 :+ "https://host-9.example/new"
-    assert(run(legacy, v2)._2 == Seq(Lineage.hostBucket(v2.last)))
-    assertOneSnapshot(legacy)
-    val after = manifest(legacy)
-    assert(after.size == Lineage.Buckets)
-    assert(after.filter(_.partition_key != Lineage.hostBucket(v2.last)) ==
-      rows.filter(_.partition_key != Lineage.hostBucket(v2.last)))
-  }
-
   test("after N publishes the manifest directory holds one snapshot and nothing else") {
     val dir = tmp("lineage-publishes")
     val us = urls(100)
@@ -139,6 +117,13 @@ class LineageManifestSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(dir, "lineage"))
     val empty = intercept[IllegalStateException](Lineage.readManifest(spark, s"$dir/lineage"))
     assert(empty.getMessage.contains("unreadable"), empty.getMessage)
+    // a directory of partition directories holds no snapshot
+    val partitioned = tmp("lineage-partitioned")
+    Seq(LineageRow("hb0", 1L, 2L, "done", new Timestamp(0L))).toDF()
+      .write.partitionBy("partition_key").parquet(s"$partitioned/lineage")
+    assert(entries(partitioned).contains("partition_key=hb0"))
+    val legacy = intercept[IllegalStateException](Lineage.readManifest(spark, s"$partitioned/lineage"))
+    assert(legacy.getMessage.contains("unreadable"), legacy.getMessage)
     Files.write(Paths.get(dir, "lineage", "snapshot-00000000000000000001.parquet"), "not parquet".getBytes)
     val e = intercept[IllegalStateException](Lineage.readManifest(spark, s"$dir/lineage"))
     assert(e.getMessage.contains("unreadable"), e.getMessage)
@@ -205,10 +190,10 @@ class LineageManifestSpec extends AnyFunSuite {
     }
     assert(jobs.nonEmpty, "the resume decision runs at least its fingerprint job")
     assert(!jobs.exists(listing), s"listing jobs: ${jobs.filter(listing)}")
-    // the detector sees the listing job the partitioned layout starts
-    val legacy = s"$dir/legacy"
-    Lineage.readManifest(spark, s"$dir/lineage").toDF().write.partitionBy("partition_key").parquet(legacy)
-    assert(SparkTestBase.jobDescriptions(Lineage.readManifest(spark, legacy)).exists(listing))
+    // the detector sees the listing job a 64-directory partitioned read starts
+    val partitioned = s"$dir/partitioned"
+    Lineage.readManifest(spark, s"$dir/lineage").toDF().write.partitionBy("partition_key").parquet(partitioned)
+    assert(SparkTestBase.jobDescriptions(spark.read.parquet(partitioned).collect(): Unit).exists(listing))
   }
 
   test("reading a 64-bucket snapshot is one job") {
